@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale factor and prints one JSON line.
@@ -60,38 +59,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // at session build, not as a Tables.events side effect: the flag is
-      // session-wide and behavior must not depend on read order
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reset the Java serialization handle table after EVERY object:
-      // the disk leg of big caches writes fat columnar batches through
-      // one ObjectOutputStream, and the default reset-every-100 retains
-      // ~100 batches (~GBs) per task — the x100/8g text-cache OOM
-      .config("spark.serializer.objectStreamReset", "1")
-      // codegen cache sized to the suite (STATIC conf, default 100
-      // entries): 175 queries × several codegen units each churn the
-      // default cache continuously, so cross-query runs recompile
-      // janino units they compiled minutes earlier (the warmup comment
-      // below measured that eviction at ~60 intervening queries).
-      // Scale-neutral: the cache holds compiled classes for DISTINCT
-      // plan shapes, a workload property, not a data-size one.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // let AQE coalesce CACHED-plan output partitioning too (round-16,
-      // guide §2.2 "fewer, larger"): default-off, which pins every
-      // in-query .cache()'d relation at the raw shuffle partition count,
-      // so each of its consumers pays one task per shuffle partition
-      // regardless of data size (measured: q_rfm_approx warm 1.15 -> 0.72 s,
-      // 9 -> 6 jobs; the dedup-family IMR consumers shed tasks the same
-      // way). Scale-adaptive by construction - AQE sizes partitions from
-      // bytes, not from a tuned constant.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.forMain()
     spark.sparkContext.setLogLevel("WARN")
     // job counter: listener events are delivered asynchronously, so reads
     // go through drainedJobCount (polls until the count is stable) AFTER

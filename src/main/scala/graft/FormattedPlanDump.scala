@@ -3,17 +3,15 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for named graded queries to files —
   * the plans/r15/<query>_<tag>.txt artifacts the optimization round
   * commits so plan-shape claims are checkable without running Spark.
   *
   *   sbt "runMain graft.FormattedPlanDump <outDir> <tag> q_a q_b ..."
   *
-  * Bench session config (32 shuffle partitions at local[32]), so the
-  * dumped shapes are the shapes the bench actually measures. Queries
-  * whose operators memoize cached relations are dumped on the SECOND
+  * Bench's session ([[GraftSession]], 32 shuffle partitions at
+  * local[32]), so the dumped shapes are the shapes the bench measures.
+  * Queries whose operators memoize cached relations are dumped on the SECOND
   * build (after one full count()) — the steady-state plan the warm
   * bench run executes, which is where the round's plan-shape changes
   * (IMR-leaf consumers) are visible. */
@@ -23,27 +21,13 @@ object FormattedPlanDump {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // let AQE coalesce CACHED-plan output partitioning too (round-16,
-      // guide §2.2 "fewer, larger"): default-off, which pins every
-      // in-query .cache()'d relation at the raw shuffle partition count,
-      // so each of its consumers pays one task per shuffle partition
-      // regardless of data size (measured: q_rfm_approx warm 1.15 -> 0.72 s,
-      // 9 -> 6 jobs; the dedup-family IMR consumers shed tasks the same
-      // way). Scale-adaptive by construction - AQE sizes partitions from
-      // bytes, not from a tuned constant.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.forMain()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    // tws warmup — see ProfileProbe
+    // q_funnel_tws warms the batch transformWithState path: the FIRST
+    // tws query in a session can race RocksDB's snapshot-upload report
+    // against StateStoreCoordinator endpoint creation and fail with
+    // CANNOT_LOAD_STATE_STORE
     Seq("q_funnel_tws").foreach { q =>
       try SparkEntry.queries(q)(spark, sfDir).count() catch { case _: Throwable => () }
     }

@@ -88,12 +88,7 @@ object ScaleGen {
     val embMult = if (args.length > 3) args(3).toDouble else mult
     val skew = args.drop(4).contains("skew")
     val paras = args.drop(4).contains("paras")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scalegen").getOrCreate()
+    val spark = GraftSession.forMain(partitions = Some("32"))
     spark.sparkContext.setLogLevel("WARN")
     write(spark, outDir, mult, docsMult, embMult, skew, paras)
     spark.stop()

@@ -45,9 +45,9 @@ object Tables {
     * per-reader, and must be on BEFORE inference or a TIMESTAMP(NANOS)
     * footer fails instead of inferring LongType) — after the first
     * call, any OTHER TIMESTAMP(NANOS) parquet read in the session
-    * yields Longs instead of failing. Graft's own mains (Verify/Bench)
-    * set the flag at session build so behavior is order-independent;
-    * external callers embedding this library should do the same. */
+    * yields Longs instead of failing. [[GraftSession]]'s profile sets
+    * the flag at session build so behavior is order-independent; a
+    * caller embedding this library copies that profile. */
   /** Memo key: canonical path (so relative/absolute spellings share an
     * entry) + the directory's lastModified (so regenerating the table
     * in place — Spark's write commits rename into the dir and bump its

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -16,39 +15,7 @@ object Verify {
     // runs (the driver always passes exactly two args = full dump)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // at session build, not as a Tables.events side effect: the flag is
-      // session-wide and behavior must not depend on read order
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reset the Java serialization handle table after EVERY object:
-      // the disk leg of big caches writes fat columnar batches through
-      // one ObjectOutputStream, and the default reset-every-100 retains
-      // ~100 batches (~GBs) per task — the x100/8g text-cache OOM
-      .config("spark.serializer.objectStreamReset", "1")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // let AQE coalesce CACHED-plan output partitioning too (round-16,
-      // guide §2.2 "fewer, larger"): default-off, which pins every
-      // in-query .cache()'d relation at the raw shuffle partition count,
-      // so each of its consumers pays one task per shuffle partition
-      // regardless of data size (measured: q_rfm_approx warm 1.15 -> 0.72 s,
-      // 9 -> 6 jobs; the dedup-family IMR consumers shed tasks the same
-      // way). Scale-adaptive by construction - AQE sizes partitions from
-      // bytes, not from a tuned constant.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-    // optional conf overrides ("k=v;k=v"), applied AFTER the defaults so
-    // they win; used by tools/spill_check.sh to shrink partitions and
-    // force the spill thresholds under a constrained heap
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";")
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.forMain()
     spark.sparkContext.setLogLevel("WARN")
     // suite-total spill accounting (one line on stderr at exit): the
     // constrained-heap rehearsal needs proof the spill path RAN, not

@@ -617,11 +617,12 @@ object Dedup {
     // shingled corpus — the round-8 design — was the FIRST memory wall
     // at x100/8g, before any aggregate ran: ~8.5 GB of shingle strings
     // over 32 partitions means 32 concurrent tasks each BUILD a
-    // ~270 MB columnar block before eviction can help (MhProbe pinned
-    // the OOM to the cache-materialization stage alone). The corpus
-    // pass now computes shingles inline exactly once — inside the
-    // signature projection — and only the CANDIDATE docs (a
-    // pair-mass-sized set, below) are ever re-shingled for
+    // ~270 MB columnar block before eviction can help (a phase bisection
+    // pinned the OOM to the cache-materialization stage alone; BASELINE.md
+    // "Round-9: q_dedup_minhash past the x100 single-node memory
+    // ceiling"). The corpus pass now computes shingles inline exactly
+    // once — inside the signature projection — and only the CANDIDATE
+    // docs (a pair-mass-sized set, below) are ever re-shingled for
     // verification.
     val spreadDocs = spread(df)
     // persisted DISK_ONLY: the band relation is consumed TWICE by
@@ -972,11 +973,11 @@ object Dedup {
 
   /** 64-bit majority-vote SimHash signatures: (doc_id, sig) with sig
     * the signature PACKED into one long (bit j = majority vote of
-    * plane j). Shared by [[simhash]] (banding path) and
-    * graft.RecallProbe (ground-truth pairwise hamming over planted
-    * pairs — same deterministic signatures, independent of banding).
-    * Cached: feeds chunking and the banding self-join; see
-    * [[minhashLsh]]'s caching note. */
+    * plane j). Used by [[simhash]] (banding path); the ground-truth
+    * recall check over planted pairs (pairwise hamming on these same
+    * deterministic signatures, independent of banding) is recorded in
+    * BASELINE.md ("Round-8 simhash closure"). Cached: feeds chunking
+    * and the banding self-join; see [[minhashLsh]]'s caching note. */
   private[graft] def simhashSignatures(df: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     // handle memo + IMR-leaf (round-15): consumers (banding, the

@@ -41,6 +41,10 @@ object Similarity {
       .limit(k)
   }
 
+  /** Upper bound on [[mmrTopK]]'s kCand: 25× the graded 20, i.e.
+    * ≤ 250k pair scores on the driver. */
+  val MmrMaxCandidates: Int = 500
+
   /** MMR re-ranking (maximal marginal relevance, Carbonell & Goldstein
     * 1998) of the dense-retrieval candidate set — the diversity step a
     * retrieval-then-curate pipeline runs after [[cosineTopK]] so the
@@ -67,10 +71,14 @@ object Similarity {
     * probe + crossJoin leg), ~4 corpus passes per call; collecting the
     * ≤ kCand candidate rows once (exact doubles round-trip through
     * collect) and crossing them locally cuts that to the 2 passes the
-    * operator fundamentally needs. */
+    * operator fundamentally needs. kCand is capped at
+    * [[MmrMaxCandidates]] so that driver-side fit stays bounded. */
   def mmrTopK(df: DataFrame, idCol: String, vecCol: String, probeId: Long,
       kCand: Int, kOut: Int): DataFrame = {
     require(kOut >= 1 && kOut <= kCand, s"need 1 <= kOut=$kOut <= kCand=$kCand")
+    require(kCand <= MmrMaxCandidates,
+      s"kCand=$kCand exceeds MmrMaxCandidates=$MmrMaxCandidates (kCand vectors " +
+        "and kCand² pair scores are collected to the driver)")
     val spark = df.sparkSession
     import spark.implicits._
     // bounded fit: kCand (id, scaled cosine) rows

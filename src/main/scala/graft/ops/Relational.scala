@@ -1137,14 +1137,14 @@ object Relational {
       .orderBy($"o_orderkey")
   }
 
-  /** The GUARDED try_ shape (round-13 verdict item 6 / DualBench's
-    * 157× find on q_fn_try): [[fnTry]] demonstrates the intrinsic try_
-    * semantics on legs that fail ~100% of rows BY DESIGN, which means
-    * its bench row is dominated by Spark's per-row exception unwind —
-    * linear and partitionable, but not the shape a pipeline should run
-    * at 100 TB. This twin is the recommended form: a cheap compiled
-    * PREDICATE decides each row's fate and try_ remains only as the
-    * belt-and-braces fallback inside the guarded branch, so the
+  /** The GUARDED try_ shape (round-13 verdict item 6 / the 157×
+    * count-vs-materialized gap on q_fn_try in DUALBENCH.json): [[fnTry]]
+    * demonstrates the intrinsic try_ semantics on legs that fail ~100%
+    * of rows BY DESIGN, which means its bench row is dominated by
+    * Spark's per-row exception unwind — linear and partitionable, but
+    * not the shape a pipeline should run at 100 TB. This twin is the
+    * recommended form: a cheap compiled PREDICATE decides each row's
+    * fate and try_ remains only as the belt-and-braces fallback inside the guarded branch, so the
     * exception path executes on ~zero rows and the whole projection
     * stays in whole-stage codegen at predicate cost. Output semantics
     * are IDENTICAL to [[fnTry]] row-for-row (the oracle asserts the

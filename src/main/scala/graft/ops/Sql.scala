@@ -188,9 +188,9 @@ object Sql {
     * footer stats make near-free); see the job-count note below for
     * why bounds does NOT reuse per_month.
     *
-    * Job count, measured at sf0.1 (MiniBench): naive form 8 jobs, this
-    * form 7 — the survivors are per_month's two-stage aggregate, the
-    * anchor's min/max, UnionLoop's iteration/fixpoint materializations
+    * Job count, measured at sf0.1 (Bench's per-query `jobs`): naive
+    * form 8 jobs, this form 7 — the survivors are per_month's two-stage
+    * aggregate, the anchor's min/max, UnionLoop's iteration/fixpoint materializations
     * and the final join+sort. Spark inlines a CTE at every reference
     * site (no MATERIALIZED keyword like DuckDB), so deriving bounds
     * FROM per_month recomputes the full aggregate inside the loop

@@ -307,8 +307,8 @@ class BpeSpec extends SparkSpec {
     // the depth regression class: the first batched formulation was
     // correct to step 14 and diverged at 15 (a conflicting pair ranked
     // BELOW an equal-count candidate bounded a new pair that tie-broke
-    // above it — BpeDepthProbe found it; the admission scan now folds
-    // the whole collected list). Ground truth at depth is the O(n²)
+    // above it — found at 128-merge depth, BASELINE.md; the admission
+    // scan now folds the whole collected list). Ground truth at depth is the O(n²)
     // driver replay over the collected word frequencies — independent
     // of both DataFrame formulations and cheap at this vocab size.
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")

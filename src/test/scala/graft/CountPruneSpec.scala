@@ -45,8 +45,6 @@ class CountPruneSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      // leaf extraction shared with CountPruneProbe via PlanLeaves —
-      // one definition of "pruned", probe and gate can never disagree
       if (PlanLeaves.prunedUnderCount(fn(spark, dir)).nonEmpty
           && !adjudicated.contains(name)) offenders += name
       spark.catalog.clearCache()

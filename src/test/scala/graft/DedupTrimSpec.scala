@@ -205,4 +205,14 @@ class DedupTrimSpec extends SparkSpec {
       .as[Long].head()
     assert(out(0).getLong(2) == 7L * c1)
   }
+
+  test("mmrTopK rejects a kCand above the driver-collect cap") {
+    import spark.implicits._
+    val df = Seq((0L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val cap = graft.api.Similarity.MmrMaxCandidates
+    val e = intercept[IllegalArgumentException] {
+      graft.api.Similarity.mmrTopK(df, "vec_id", "embedding", 0L, kCand = cap + 1, kOut = 1)
+    }
+    assert(e.getMessage.contains("MmrMaxCandidates"))
+  }
 }

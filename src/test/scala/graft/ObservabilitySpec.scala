@@ -30,7 +30,7 @@ class ObservabilitySpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = observedOut.groupBy($"lang").agg(count(lit(1)).as("n")).collect()
-      // listenerBus is private[spark]; the MiniBench reflection trick
+      // listenerBus is private[spark]: reflection, as graft.Bench drains it
       val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
       assert(out.nonEmpty)

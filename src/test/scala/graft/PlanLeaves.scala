@@ -3,11 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Shared leaf-signature extraction for the count-prunability sweep —
-  * ONE definition of "which relation is this leaf" used by both the
-  * dev probe (CountPruneProbe) and the gating spec (CountPruneSpec),
-  * so the two can never silently disagree about what counts as a
-  * pruned leaf (review finding). */
+/** Leaf-signature extraction for the count-prunability gate
+  * (CountPruneSpec): the one definition of "which relation is this
+  * leaf". */
 private[graft] object PlanLeaves {
 
   def sigs(plan: LogicalPlan): Seq[String] =

@@ -4,14 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one SparkContext per forked test
-  * JVM). */
+  * JVM): the [[GraftSession]] profile the mains run, at local[4] with 4
+  * shuffle partitions. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(GraftSession.profile("4", "4")).getOrCreate()
 }
 
 trait SparkSpec extends AnyFunSuite {

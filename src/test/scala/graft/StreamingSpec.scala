@@ -260,8 +260,8 @@ class StreamingSpec extends SparkSpec {
     // TimeMode.None() used to fail any non-NONE TTL at query start).
     // POLL the sink rather than processAllAvailable: under a TTL the
     // engine retriggers empty micro-batches continuously for state
-    // cleanup, so processAllAvailable never returns (TtlProbe finding:
-    // batchId 87, numInputRows 0, after 60 s on a two-row stream).
+    // cleanup, so processAllAvailable never returns (measured: batchId 87,
+    // numInputRows 0, after 60 s on a two-row stream; SURVEY.md).
     val sigA = 0x0123456789abcdefL
     val sigs = Seq(1L -> sigA, 2L -> (sigA ^ 0x3L))
     def bands(docSig: (Long, Long)): Seq[Streaming.SigBand] =

@@ -1,15 +1,17 @@
 #!/bin/sh
 # Run a graft main class with the same JVM flags build.sbt gives forked
-# runs, WITHOUT an sbt instance — so long-running tools (ScaleGen,
-# MiniBench, SkewProbe, RecallProbe) can run in the background while a
+# runs, WITHOUT an sbt instance — so long-running mains (ScaleGen, Bench,
+# Verify, FormattedPlanDump) can run in the background while a
 # concurrent `sbt test`/`sbt compile` holds the project lock.
 # Requires a prior `sbt compile` (reads target/scala-2.13/classes).
 #
 # Usage: tools/run_main.sh graft.ScaleGen <args...>
-# Env: SPARK_DRIVER_MEM (default 24g) — same knob as build.sbt.
+# Env: SPARK_DRIVER_MEM (default: half of RAM, clamped to 2g..24g) —
+# same knob and rule as build.sbt.
 set -e
 cd "$(dirname "$0")/.."
 MAIN="$1"; shift
+: "${SPARK_DRIVER_MEM:=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' </proc/meminfo 2>/dev/null || echo 2g)}"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -26,6 +28,6 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-24g}" \
+  -Xmx"$SPARK_DRIVER_MEM" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
