@@ -1362,8 +1362,10 @@ object Oracle {
         |       CAST(sum(monetary) AS DOUBLE) AS segment_value
         |FROM seg GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
 
-    // triangle replay: identical oriented-edge wedge formulation; the
-    // closing-edge check is EXISTS (≡ Spark's left_semi)
+    // triangle replay: relational wedge formulation (oriented edges
+    // joined on the middle node, closing edge checked with EXISTS) of the
+    // counts the Spark side derives by forward-neighbour intersection —
+    // independent derivations must agree
     "q_graph_triangles" ->
       """WITH lp AS (
         |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One reader per table. Explicit schema: skips footer merging across
   * the (at 100 TB: many thousands of) files of a production table and
@@ -31,14 +31,14 @@ object Tables {
     * Hardcoding one unit silently shears the other by 1000× (the
     * round-5 regression: the testdata flipped ns→µs and `ts DIV 1000`
     * compressed every event into Jan 1970, 12 red oracle rows), so the
-    * reader sniffs: infer the footer schema once per directory and
-    * branch on the physical type of `ts`.
+    * reader sniffs: read one data file's footer once per table version
+    * and branch on the physical type of `ts`.
     *
     * The ns path converts via integer division — `ts DIV 1000` then
     * timestamp_micros — which is exact (generators emit µs-precision
     * values; double division would be lossy: 2024 epoch-ns ≈ 1.7e18 >
-    * 2^53). The sniff result is memoized per path: one extra footer
-    * read per table directory per JVM, nothing per query.
+    * 2^53). The sniff result is memoized per table version: one footer
+    * read on the driver per version per JVM, no job, nothing per query.
     *
     * SESSION-WIDE SIDE EFFECT: sets spark.sql.legacy.parquet.nanosAsLong
     * for the whole session (the flag is read at scan planning, not
@@ -57,6 +57,33 @@ object Tables {
   private val eventsTsKind =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
 
+  /** Physical type of `ts` as Spark would read it, from ONE data file's
+    * footer. `spark.read.parquet(p).schema` would start a job (Spark's
+    * parallel schema merge) on every new table version; the footer read
+    * and Spark's own parquet→Spark type converter, under the session's
+    * conf (nanosAsLong included), give the same `ts` type on the driver
+    * alone. Only `ts` is compared: the full schemas differ in
+    * nullability. */
+  private def footerTsType(spark: SparkSession, p: String): Option[DataType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(p)
+    val fs = root.getFileSystem(conf)
+    // a data file: the path itself, or the first non-hidden file under
+    // it (Spark's writers put _SUCCESS / .crc beside the part files)
+    val files = fs.listFiles(root, true)
+    val data = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .getOrElse(throw new IllegalStateException(s"no parquet data file under $p"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(data, conf))
+    val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(schema)
+      .find(_.name == "ts").map(_.dataType)
+  }
+
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -64,8 +91,7 @@ object Tables {
     val f = new java.io.File(path)
     val kind = eventsTsKind.computeIfAbsent(
       (f.getCanonicalPath, f.lastModified), { case (p, _) =>
-        val schema = spark.read.parquet(p).schema
-        schema.find(_.name == "ts").map(_.dataType) match {
+        footerTsType(spark, p) match {
           case Some(org.apache.spark.sql.types.TimestampType) => "us"
           case Some(org.apache.spark.sql.types.TimestampNTZType) => "ntz"
           case Some(org.apache.spark.sql.types.LongType) => "ns"

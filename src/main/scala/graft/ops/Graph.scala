@@ -59,44 +59,69 @@ object Graph {
         (lit(150000L) + expr("(85 * coalesce(c, 0L)) div 100")).as("pr"))
   }
 
+  /** The one triangle kernel, over an ORIENTED edge list: rows
+    * (p1, p2) where p1 precedes p2 in a total order on nodes. Duplicate
+    * rows are absorbed, and a row whose p2 is null only registers p1 as
+    * a node. With every edge pointing forward, each triangle
+    * x < y < z is counted exactly once, at its edge (x, y), as the
+    * common forward neighbour z: the count is
+    * Σ over edges (u, v) of |N⁺(u) ∩ N⁺(v)|, where N⁺(u) is u's set of
+    * forward neighbours.
+    *
+    * Plan: ONE groupBy(p1) builds each node's N⁺ as a collect_set; each
+    * edge (u, v) of N⁺(u) meets N⁺(v) in ONE equi-join of that relation
+    * with itself on v (both sides are the same aggregate, so its
+    * exchange is reused); ONE global aggregate then yields n_nodes,
+    * n_edges and n_triangles together. No wedge is ever materialized:
+    * the join carries one row per edge, and the intersection is a
+    * hash probe of two out-neighbour sets, whose size the orientation
+    * bounds. Integer counts, one row, engine-exact.
+    */
+  private def orientedTriangles(oriented: DataFrame): DataFrame = {
+    val adj = oriented.groupBy(col("p1").as("u"))
+      .agg(collect_set(col("p2")).as("nu"))
+    adj
+      // posexplode_outer keeps a node whose N⁺ is empty (pos null), so
+      // "pos is null or 0" marks exactly one row per node
+      .select(col("nu"), posexplode_outer(col("nu")).as(Seq("pos", "v")))
+      .join(adj.select(col("u").as("v"), col("nu").as("nv")), Seq("v"), "left")
+      .agg(
+        count(when(col("pos").isNull || col("pos") === 0, 1)).as("n_nodes"),
+        count(col("v")).as("n_edges"),
+        coalesce(sum(when(col("nv").isNotNull, size(array_intersect(col("nu"), col("nv"))))),
+          lit(0L)).as("n_triangles"))
+  }
+
   /** Triangle counting over the part co-purchase graph — the motif-
-    * counting workload, in the standard distributed formulation: orient
-    * every edge from the lower to the higher endpoint id, join oriented
-    * edges on the shared middle node to enumerate wedges, then
-    * semi-check the closing edge. Orientation counts each triangle
-    * exactly once and bounds the wedge join by the oriented
-    * out-degrees; at scale the refinement is degree-based orientation
-    * (low-degree → high-degree endpoint), which caps out-degree at
-    * O(√edges) even on skewed graphs — id-orientation suffices here
-    * because basket-derived degrees are small and uniform. Three
-    * integer counts, one row, engine-exact.
+    * counting workload. Nodes are parts, edges join parts bought in the
+    * same order (orderkey filter as in [[purchaseEdges]]), oriented from
+    * the lower to the higher part id. The oriented pairs come from the
+    * per-order collect_set + pair expansion [[Relational.basketPairs]]
+    * uses: the sorted basket emits every (earlier, later) pair, and the
+    * set absorbs repeated lines, so no distinct or self-join of lineitem
+    * is needed. The expansion is outer, so a basket's last part emits
+    * (p, null) and registers as a node; single-part baskets carry no
+    * edge and are dropped. [[orientedTriangles]] then counts nodes,
+    * edges and triangles in one aggregate.
+    *
+    * Id orientation suffices here because basket-derived degrees are
+    * small and uniform; on skewed graphs orient by (degree, id), which
+    * caps out-degree at O(√edges) — see [[countTriangles]]. The oracle
+    * replays the count with a wedge join and EXISTS, independently
+    * derived. Three integer counts, one row, engine-exact.
     */
   def triangleCount(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val lp = Tables.lineitem(spark, dir)
+    val oriented = Tables.lineitem(spark, dir)
       .filter($"l_orderkey" % 10 === 0)
-      .select($"l_orderkey", $"l_partkey").distinct()
-    // co-purchase edges, oriented p1 < p2; three consumers (node count,
-    // edge count, two sides of the wedge join + the closing check) —
-    // cached, same session-lifetime contract as pageRank's edge list
-    val e = lp.as("a")
-      .join(lp.as("b"), $"a.l_orderkey" === $"b.l_orderkey" && $"a.l_partkey" < $"b.l_partkey")
-      .select($"a.l_partkey".as("p1"), $"b.l_partkey".as("p2"))
-      .distinct().cache()
-    val nodes = e.select($"p1".as("n")).union(e.select($"p2".as("n")))
-      .distinct().agg(count(lit(1)).as("n_nodes"))
-    val edges = e.agg(count(lit(1)).as("n_edges"))
-    val tris = e.as("w1")
-      .join(e.as("w2"), $"w1.p2" === $"w2.p1")
-      .select($"w1.p1".as("x"), $"w2.p2".as("z"))
-      // semi join = "exists a closing edge": each wedge ROW (one per
-      // triangle, since e is distinct and orientation fixes the roles)
-      // is kept or dropped — left multiplicity is preserved, and the
-      // right side is unique on (p1, p2) so inner would count the same
-      .join(e.as("c"), $"x" === $"c.p1" && $"z" === $"c.p2", "left_semi")
-      .agg(count(lit(1)).as("n_triangles"))
-    nodes.crossJoin(edges).crossJoin(tris)
-      // 1-row final cached — repeat calls skip the wedge join (same
+      .groupBy($"l_orderkey")
+      .agg(sort_array(collect_set($"l_partkey")).as("parts"))
+      .filter(size($"parts") >= 2)
+      .select($"parts", posexplode($"parts"))
+      .toDF("parts", "i", "p1")
+      .select($"p1", explode_outer(expr("slice(parts, i + 2, size(parts))")).as("p2"))
+    orientedTriangles(oriented)
+      // 1-row final cached — repeat calls skip the whole kernel (same
       // steady-state contract as the dedup family)
       .cache()
   }
@@ -104,13 +129,12 @@ object Graph {
   /** Count triangles in an UNDIRECTED edge list (rows (a, b), a ≠ b,
     * either or both directions may be present) with a caller-chosen
     * orientation. Orientation assigns each undirected edge exactly one
-    * direction by a total order on nodes; every triangle then appears
-    * as exactly one (x→y, y→z, x→z) wedge-plus-closing-edge, so the
-    * count is orientation-INVARIANT — but the wedge join's size is not:
-    * out-degree under id order is unbounded on skewed graphs, while
-    * ordering nodes by (degree, id) caps oriented out-degree at
-    * O(√edges), the classic worst-case bound. PropertySpec pins the
-    * invariance on random graphs.
+    * direction by a total order on nodes, so the count
+    * ([[orientedTriangles]]) is orientation-INVARIANT — but the size of
+    * the forward-neighbour sets is not: out-degree under id order is
+    * unbounded on skewed graphs, while ordering nodes by (degree, id)
+    * caps oriented out-degree at O(√edges), the classic worst-case
+    * bound. PropertySpec pins the invariance on random graphs.
     */
   private[graft] def countTriangles(undirected: DataFrame,
       byDegree: Boolean): Long = {
@@ -135,11 +159,7 @@ object Graph {
             when($"du" < $"dv" || ($"du" === $"dv" && $"u" < $"v"), $"v")
               .otherwise($"u").as("p2"))
       }
-    oriented.as("w1")
-      .join(oriented.as("w2"), $"w1.p2" === $"w2.p1")
-      .select($"w1.p1".as("x"), $"w2.p2".as("z"))
-      .join(oriented.as("c"), $"x" === $"c.p1" && $"z" === $"c.p2", "left_semi")
-      .count()
+    orientedTriangles(oriented).head().getAs[Long]("n_triangles")
   }
 
   /** 3 fixed iterations from a uniform 1 000 000 start; top 20 by rank

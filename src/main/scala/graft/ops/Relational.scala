@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, StructField, StructType}
@@ -595,14 +597,76 @@ object Relational {
       .orderBy($"o_orderpriority")
   }
 
-  /** Approximate distinct (HLL). No oracle: estimates are engine-specific;
-    * the unit test asserts relative error vs exact instead. */
+  /** Approximate distinct users per event type: Spark's HLL++ estimate
+    * at rsd 0.02, bit-identical to `approx_count_distinct(user_id, 0.02)`
+    * (see [[hllDistinct]]). No oracle: estimates are engine-specific;
+    * PropertySpec pins equality with the built-in. */
   def aggApproxDistinct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.events(spark, dir)
-      .groupBy($"event_type")
-      .agg(approx_count_distinct($"user_id", 0.02).as("approx_users"))
+    hllDistinct(Tables.events(spark, dir), "event_type", "user_id", "approx_users")
       .orderBy($"event_type")
+  }
+
+  /** HLL++ precision exactly as `HyperLogLogPlusPlusHelper` derives it
+    * from the relative standard deviation. */
+  private val HllRsd = 0.02
+  private val HllP = math.ceil(2.0d * math.log(1.106d / HllRsd) / math.log(2.0d)).toInt
+  private val Hll = new HyperLogLogPlusPlusHelper(HllRsd)
+
+  /** Registers → Spark's estimate. Each register arrives packed as
+    * idx · 64 + rank (rank ≤ 64 - p + 1 < 64) and is laid into the
+    * 6-bit-per-register word buffer `HyperLogLogPlusPlus` aggregates
+    * into, so `query` (linear counting, bias correction) is Spark's. */
+  private val hllQuery = udf { (regs: Seq[Long]) =>
+    import HyperLogLogPlusPlusHelper.{REGISTERS_PER_WORD, REGISTER_SIZE}
+    val buf = new GenericInternalRow(Array.fill[Any](Hll.numWords)(0L))
+    regs.foreach { r =>
+      val idx = (r >>> 6).toInt
+      val word = idx / REGISTERS_PER_WORD
+      val shift = REGISTER_SIZE * (idx - word * REGISTERS_PER_WORD)
+      buf.setLong(word, buf.getLong(word) | ((r & 63L) << shift))
+    }
+    Hll.query(buf, 0)
+  }.asNonNullable()
+
+  /** `approx_count_distinct(value, 0.02)` per `key`, computed from
+    * register maxima with codegen'd built-ins instead of the
+    * HyperLogLogPlusPlus aggregate. The built-in keeps a 410-word buffer
+    * per group in every partial and final aggregate; measured warm on
+    * the sf0.1-size events table it cost 693 ms against 378 ms for an
+    * exact countDistinct — the buffer, not the data. Here:
+    *  - `xxhash64(value)` is the seed-42 XXH64 hash HLL++ applies;
+    *  - the register index is the hash's top p bits, the rank the
+    *    leading zeros of the remaining bits + 1, read off
+    *    `65 - length(bin(h << p | 1 << (p - 1)))` (bin drops leading
+    *    zeros; the padding bit bounds the rank as HLL++ does);
+    *  - registers are `max(rank)` per (key, index), a plain aggregate;
+    *  - [[hllQuery]] turns each key's registers into the estimate; the
+    *    output is range-partitioned on key.
+    * Same registers, same query: the result equals the built-in's bit
+    * for bit, including 0 for a key whose values are all null (their
+    * rows carry a null register, which collect_list drops). Integral
+    * and string values only: HLL++ also normalizes -0.0 and NaN before
+    * hashing, xxhash64 does not. */
+  private[graft] def hllDistinct(df: DataFrame, key: String, value: String,
+      as: String): DataFrame = {
+    // a Spark whose precision rule drifted would read these registers
+    // as a different m: refuse rather than estimate wrong
+    require(Hll.numWords == ((1 << HllP) + HyperLogLogPlusPlusHelper.REGISTERS_PER_WORD - 1) /
+      HyperLogLogPlusPlusHelper.REGISTERS_PER_WORD, s"HLL++ precision drifted from p = $HllP")
+    val h = xxhash64(col(value))
+    val present = col(value).isNotNull
+    df.select(col(key),
+        when(present, shiftrightunsigned(h, 64 - HllP)).as("idx"),
+        when(present, lit(65) - length(bin(shiftleft(h, HllP).bitwiseOR(lit(1L << (HllP - 1))))))
+          .as("rank"))
+      .groupBy(col(key), col("idx")).agg(max(col("rank")).as("rank"))
+      // a RANGE exchange on key (not the hash one the per-key collect
+      // would plan) also satisfies a caller's ORDER BY key: one exchange
+      // and one job fewer than hash-then-sort (measured 5 → 4 jobs)
+      .repartitionByRange(col(key))
+      .groupBy(col(key))
+      .agg(hllQuery(collect_list(col("idx") * 64 + col("rank"))).as(as))
   }
 
   /** ROLLUP subtotals over (nation of customer, mktsegment). grouping_id

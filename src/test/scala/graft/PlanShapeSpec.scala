@@ -423,4 +423,38 @@ class PlanShapeSpec extends SparkSpec {
       .count(_.nodeName.contains("SortMergeJoin"))
     assert(smj == 0, s"dedup-trim must not plan a SortMergeJoin, got $smj")
   }
+
+  test("triangles: one forward-neighbour join, no all-pairs join, only the result cached") {
+    // the kernel's claims: one groupBy builds N⁺, ONE equi-join meets
+    // N⁺(u) with N⁺(v) per edge, one aggregate yields all three counts —
+    // no wedge join, no closing-edge semi-join, no crossJoin of partial
+    // counts, and no cached edge list: the 1-row result is the only
+    // relation the call leaves in the cache
+    spark.catalog.clearCache()
+    def cached() = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    val before = cached()
+    val df = graft.ops.Graph.triangleCount(spark, dir)
+    df.collect()
+    val nodes = collectExecDeep(df.queryExecution.executedPlan)
+    val nl = nodes.count(p => p.nodeName.contains("BroadcastNestedLoopJoin") ||
+      p.nodeName.contains("CartesianProduct"))
+    assert(nl == 0, s"triangles: found $nl nested-loop/cartesian joins")
+    val joins = nodes.count(p => p.nodeName.toLowerCase.contains("join"))
+    assert(joins <= 1, s"triangles: expected at most 1 join, got $joins")
+    val pinned = cached() -- before
+    assert(pinned.size == 1, s"triangles: expected exactly 1 cached relation, got ${pinned.size}")
+    spark.catalog.clearCache()
+  }
+
+  test("approx distinct: no HyperLogLogPlusPlus aggregate in the executed plan") {
+    // the 410-word-per-group HLL++ buffer is what the register kernel
+    // replaces; its estimate comes from plain max/collect_list aggregates
+    import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+    val df = graft.ops.Relational.aggApproxDistinct(spark, dir)
+    df.collect()
+    val hll = collectExec(df.queryExecution.executedPlan)
+      .count(_.expressions.exists(_.exists(_.isInstanceOf[HyperLogLogPlusPlus])))
+    assert(hll == 0, s"approx distinct: $hll plan nodes still aggregate with HyperLogLogPlusPlus")
+  }
 }

@@ -409,6 +409,80 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("triangleCount's three counts equal a driver-side count on random baskets") {
+    import spark.implicits._
+    // orders of 1-6 lines over up to 12 parts; repeated lines, non-%10
+    // orders (filtered out by the query) and single-part baskets included
+    val basketsGen = for {
+      nParts <- Gen.chooseNum(3, 12)
+      nOrders <- Gen.chooseNum(0, 25)
+      orders <- Gen.listOfN(nOrders, for {
+        ok <- Gen.chooseNum(1L, 60L)
+        k <- Gen.chooseNum(1, 6)
+        parts <- Gen.listOfN(k, Gen.chooseNum(0L, nParts - 1L))
+      } yield parts.map(ok -> _))
+    } yield orders.flatten
+    forAll(basketsGen) { lines =>
+      val d = java.nio.file.Files.createTempDirectory("graft-tri").toFile
+      try {
+        lines.toDF("l_orderkey", "l_partkey")
+          .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
+        val got = graft.ops.Graph.triangleCount(spark, d.toString).collect()
+        val edges = lines.filter(_._1 % 10 == 0).groupBy(_._1).values
+          .flatMap { ls =>
+            val ps = ls.map(_._2).distinct.sorted
+            for (i <- ps.indices; j <- (i + 1) until ps.size) yield (ps(i), ps(j))
+          }.toSet
+        val nodes = edges.flatMap(e => Seq(e._1, e._2)).toSeq.sorted
+        var tris = 0L
+        for {
+          i <- nodes.indices; j <- (i + 1) until nodes.size; k <- (j + 1) until nodes.size
+          if edges((nodes(i), nodes(j))) && edges((nodes(j), nodes(k))) &&
+            edges((nodes(i), nodes(k)))
+        } tris += 1
+        assert(got.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
+          Seq((nodes.size.toLong, edges.size.toLong, tris)), s"lines=$lines")
+      } finally {
+        spark.catalog.clearCache()
+        org.apache.commons.io.FileUtils.deleteDirectory(d)
+      }
+    }
+  }
+
+  test("hllDistinct equals approx_count_distinct(v, 0.02) bit for bit") {
+    import spark.implicits._
+    // precision as HyperLogLogPlusPlusHelper derives it: if Spark's
+    // derivation drifts, the kernel's registers stop matching and the
+    // equality below fails
+    val p = math.ceil(2.0d * math.log(1.106d / 0.02) / math.log(2.0d)).toInt
+    val m = 1 << p
+    // distinct counts per group span both estimator ranges: linear
+    // counting (small), bias-corrected (< 5m) and raw (> 5m); "nulls" is
+    // all-null (the built-in emits 0), "mixed" interleaves nulls
+    val sizes = Seq("nulls" -> 0, "one" -> 1, "small" -> 300, "linear" -> m / 2,
+      "bias" -> 3 * m, "raw" -> 6 * m, "mixed" -> 2000)
+    for (seed <- Seq(11L, 12L)) {
+      val rnd = new scala.util.Random(seed)
+      val rows = sizes.flatMap { case (g, n) =>
+        val vs = Seq.fill(n)(rnd.nextLong())
+        // every value at least once, some twice, in shuffled order
+        val dup = rnd.shuffle(vs ++ vs.take(n / 3)).map(Option(_))
+        val nulls = if (g == "nulls" || g == "mixed") Seq.fill(50)(None) else Nil
+        rnd.shuffle(dup ++ nulls).map(v => (g, v))
+      }
+      val df = rows.toDF("g", "v").repartition(4)
+      val got = graft.ops.Relational.hllDistinct(df, "g", "v", "n")
+        .as[(String, Long)].collect().toMap
+      val want = df.groupBy($"g").agg(approx_count_distinct($"v", 0.02).as("n"))
+        .as[(String, Long)].collect().toMap
+      assert(got == want, s"seed=$seed")
+      assert(want("nulls") == 0L && want.size == sizes.size)
+    }
+    val empty = Seq.empty[(String, java.lang.Long)].toDF("g", "v")
+    assert(graft.ops.Relational.hllDistinct(empty, "g", "v", "n").collect().isEmpty)
+    assert(empty.groupBy($"g").agg(approx_count_distinct($"v", 0.02)).collect().isEmpty)
+  }
+
   test("pageRankIterate matches a driver-side integer replay on random graphs") {
     import spark.implicits._
     // random directed graphs: up to 12 nodes, up to 30 distinct edges
