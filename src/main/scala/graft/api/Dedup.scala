@@ -166,10 +166,10 @@ object Dedup {
     * UDF boundary anywhere.
     *
     * CACHING CONTRACT: the filter relation is cached and memoized per
-    * reference-content fingerprint (a repeat call over the same
-    * reference pays one fingerprint job instead of rebuilding) — same
-    * session-lifetime, clearCache-on-refresh contract as
-    * [[minhashLsh]]. */
+    * [[ResultCache.planKey]] of the normalized reference keys (files
+    * + normalization plan; a repeat call over the same reference runs
+    * no build and no count job) — same session-lifetime,
+    * clearCache-on-refresh contract as [[minhashLsh]]. */
   /** Bucket sizing for [[crossCorpus]]: (nBuckets, itemsPerBucket,
     * bitsPerBucket). Total bits follow the optimal bloom sizing
     * n · ln(1/fpp) / ln²2; the bucket count keeps every bucket's
@@ -204,37 +204,23 @@ object Dedup {
     // spread both corpus sides: normalization is the heaviest per-row
     // stage and runs pre-exchange (the Dedup.exact split-count note)
     val refKeys = spread(refDf).select(normKey.as("__k"))
-    // Memo key + bloom sizing WITHOUT a per-call scan when the
-    // reference is file-backed (round-8; the warm path previously paid
-    // a full normalization pass per call just to fingerprint — ~9 s at
-    // 500k refs): catalog metadata identifies the input files
-    // (O(listing), zero data read) and the analyzed plan's semantic
-    // hash ties the key to the normalization expression and filters;
-    // the row count the sizing needs is itself memoized against that
-    // key (a pure value of the files — fingerprintFileMeta's
-    // derived-artifact contract). Non-file inputs (tests, in-memory
-    // frames) keep the one-pass content fingerprint, whose leading
-    // field is the row count.
-    val spark0 = refDf.sparkSession
-    val (fp, nRef) = ResultCache.fingerprintFileMeta(refDf) match {
-      case Some(m) =>
-        val key = s"meta/$m/${ResultCache.planKey(refKeys)}"
-        val n = ResultCache.getOrCompute[Long](
-          s"crossCorpusRefCount:${ResultCache.sessionId(spark0)}:$key",
-          _ => true)(refDf.count())
-        (key, math.max(1L, n))
-      case None =>
-        val f = ResultCache.fingerprintRelation(refKeys)
-        (s"content/$f", math.max(1L, f.takeWhile(_ != ':').toLong))
-    }
+    // Memo key + bloom sizing WITHOUT a per-call scan (a normalization
+    // pass per call cost ~9 s at 500k refs, round-8): planKey ties the
+    // key to the reference's files and to the normalization expression
+    // and filters, and the row count the sizing needs is itself
+    // memoized against that key — one count job on a miss, none on a
+    // hit.
+    val spark = refDf.sparkSession
+    val refKey = s"${ResultCache.sessionId(spark)}:${ResultCache.planKey(refKeys)}"
+    val nRef: Long = math.max(1L, ResultCache.getOrCompute[java.lang.Long](
+      s"crossCorpusRefCount:$refKey", _ => true)(refDf.count()))
     val (nBuckets, itemsPerBucket, bitsPerBucket) = bloomBucketPlan(nRef, fpp, buckets)
     def keyHash = new XxHash64(Seq(GraftExpressionBridge.eagerExpression(col("__k"))))
     // bucket id: an independent hash seed from the filter's key hash —
     // pmod handles xxhash64's full (negative-inclusive) range
     def bucketOf = pmod(xxhash64(lit("__graft_bucket"), col("__k")), lit(nBuckets))
-    val spark = refDf.sparkSession
     val filters = ResultCache.getOrCompute[DataFrame](
-      s"crossCorpusBloomParts:${ResultCache.sessionId(spark)}:$fpp:$nBuckets:$fp",
+      s"crossCorpusBloomParts:$fpp:$nBuckets:$refKey",
       ResultCache.isCached) {
       // bucket AND key hash computed MAP-SIDE so the build exchange
       // carries (long, long) rows, not the ~200-byte normalized-text
@@ -773,14 +759,15 @@ object Dedup {
     * the O(log diameter) round count the job-count engineering relies
     * on.
     *
-    * MEMOIZED per input fingerprint via [[ResultCache]]: the loop's
-    * result is keyed on the pair list's content hash, so a repeat call
-    * over identical pairs (a warm bench run, a retried batch, a
-    * pipeline stage re-evaluated downstream) returns the already-cached
-    * label relation in ~2 jobs (pair materialization + fingerprint)
-    * instead of re-running every propagation round. A memo hit whose
-    * cached labels were since dropped (clearCache) recomputes fresh —
-    * see ResultCache's validity contract.
+    * MEMOIZED per [[ResultCache.planKey]] of the pair list: a repeat
+    * call over the same pairs plan (a warm bench run, a retried batch,
+    * a pipeline stage re-evaluated downstream) returns the already-
+    * cached label relation with no preamble job — no cache,
+    * localCheckpoint or loop round re-runs. A memo hit whose cached
+    * labels were since dropped (clearCache) recomputes fresh — see
+    * ResultCache's validity contract. Assumes the pairs plan is
+    * deterministic (the sketchEmb/minhashLsh memo idiom; the pair
+    * generators here are deterministic by construction).
     *
     * THREAD SAFETY: this method temporarily overrides a session-global
     * SQL conf (adaptive.enabled) around its multi-job loop window,
@@ -792,25 +779,16 @@ object Dedup {
     * bloom clamps; its partitioned form no longer touches any conf.) */
   private[graft] def clusterPairsRounds(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 20): (DataFrame, Int) = {
-    // PLAN-KEYED fast path (round-15) in front of the content-keyed
-    // memo below: a repeat call with the semantically-identical pairs
-    // plan (the warm bench run, a pipeline stage re-evaluated) skips
-    // the cache + localCheckpoint + fingerprint preamble entirely —
-    // those are 2-3 driver-latency jobs per call even when the
-    // content memo hits. Assumes a plan is deterministic within a
-    // session (the sketchEmb/minhashLsh memo idiom; the pair
-    // generators here are deterministic by construction). The
-    // content-keyed memo stays the ground truth on a miss.
-    val planKey = s"clusterPlan:${ResultCache.sessionId(pairs.sparkSession)}:" +
+    val key = s"clusterPlan:${ResultCache.sessionId(pairs.sparkSession)}:" +
       s"$aCol:$bCol:$maxIters:${ResultCache.planKey(pairs)}"
-    ResultCache.getOrCompute[((DataFrame, Int), DataFrame)](planKey,
+    ResultCache.getOrCompute[((DataFrame, Int), DataFrame)](key,
       { case (_, gen) => ResultCache.isCached(gen) }) {
       val (res, rounds, gen) = clusterPairsRoundsBuild(pairs, aCol, bCol, maxIters)
       ((res, rounds), gen)
     }._1
   }
 
-  /** The un-memoized (at plan level) body of [[clusterPairsRounds]];
+  /** The un-memoized body of [[clusterPairsRounds]];
     * additionally returns the cached-generation handle the validity
     * probe must watch. */
   private def clusterPairsRoundsBuild(pairs: DataFrame, aCol: String, bCol: String,
@@ -822,7 +800,7 @@ object Dedup {
     // cached — job count is the contention-sensitivity metric)
     val fwd = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .cache()
-    // AQE is DISABLED for the fingerprint + loop window: every input is
+    // AQE is DISABLED for the checkpoint + loop window: every input is
     // a cached relation with exact size statistics, so static planning
     // already picks the right (broadcast) joins — while AQE materializes
     // each round's (and the pair-generation plan's) exchanges as
@@ -841,47 +819,33 @@ object Dedup {
     val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // LINEAGE TRUNCATION first (round-8, measured): every downstream
-      // plan — the fingerprint, and every loop round — would otherwise
-      // embed the caller's whole pair-generation tree, and for a wide
+      // LINEAGE TRUNCATION first (round-8, measured): every loop
+      // round's plan would otherwise embed the caller's whole
+      // pair-generation tree, and for a wide
       // plan the DRIVER-side analysis/optimization of that tree per
       // reference dwarfs the executed jobs (q_dedup_semantic's 14-level
       // sketch plan spent ~33 s of a 37 s cluster call in planning;
       // jobs totaled 4.6 s). localCheckpoint materializes the cached
-      // edge list into a LogicalRDD leaf in ONE pass (it reads fwd's
-      // cache entry, which stays live so a REPEAT call's fwd.cache()
-      // still plan-matches and re-materializes cheaply), after which
-      // the fingerprint job and the rounds plan over a leaf-sized tree.
+      // edge list into a LogicalRDD leaf in ONE pass, after which the
+      // rounds plan over a leaf-sized tree.
       // Trade: a localCheckpoint does not survive executor loss (the
       // query fails rather than recomputes) — the standard iterative-
       // loop trade; the next call simply recomputes fresh.
       val fwdT = fwd.localCheckpoint()
-      // ONE cheap job folds the content fingerprint for the memo
-      // lookup. The session's identity is part of the key: a memoized
-      // handle is bound to the session that built it, and must not be
-      // served to a different (e.g. restarted) session even for
-      // identical input — keyed on the session UUID, not
-      // identityHashCode (identity hash codes are reused after GC, so a
-      // restarted session could collide with a dead one and be served a
-      // handle built on a dead plan).
-      val key = s"clusterPairs:${ResultCache.sessionId(spark)}:$maxIters:" +
-        ResultCache.fingerprintPairs(fwdT, "src", "dst")
-      // the memo stores the HANDLE the final round's cache was
-      // registered under (validity must probe that exact plan — a
-      // projection of it reports StorageLevel.NONE), so the public
-      // column shape is derived after retrieval
-      val (gen, rounds) = ResultCache.getOrCompute[(DataFrame, Int)](key,
-        { case (g, _) => ResultCache.isCached(g) })(propagateLabels(fwdT, maxIters))
+      // gen is the HANDLE the final round's cache was registered under
+      // (the memo's validity must probe that exact plan — a projection
+      // of it reports StorageLevel.NONE), so the public column shape is
+      // derived from it
+      val (gen, rounds) = propagateLabels(fwdT, maxIters)
       (gen.select(col("id").as("doc_id"), col("comp").as("canonical_doc"))
         .orderBy(col("doc_id")), rounds, gen)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
-      // fwd's cache is deliberately NOT unpersisted: a repeat call's
-      // fwd.cache() plan-matches this entry, so its fingerprint job
-      // reads the in-memory pair list instead of re-materializing the
-      // caller's whole pair-generation plan (measured on
-      // q_dedup_cluster: warm run 10 jobs re-deriving minhash pairs vs
-      // 3 with the entry live). Same session-lifetime contract, same
+      // fwd's cache is deliberately NOT unpersisted: a memo miss over
+      // the same pairs (another maxIters or column pair, or labels
+      // evicted while fwd survived) checkpoints from the in-memory pair
+      // list instead of re-materializing the caller's whole
+      // pair-generation plan. Same session-lifetime contract, same
       // few-MB evictable cost, and same clearCache() guidance as
       // [[minhashLsh]]'s shingle cache.
       ()
@@ -981,9 +945,8 @@ object Dedup {
   private[graft] def simhashSignatures(df: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     // handle memo + IMR-leaf (round-15): consumers (banding, the
-    // ladder's fingerprint probe, chunk-bucket builders) re-analyzed
-    // the shingle+signature tree per call; the leaf handle also makes
-    // the ladder memo's fingerprint job plan over one node
+    // ladder, chunk-bucket builders) re-analyzed the shingle+signature
+    // tree per call
     val key = s"simhashSigs:${ResultCache.sessionId(df.sparkSession)}:$idCol:$textCol:" +
       s"$n:${ResultCache.planKey(df)}"
     ResultCache.getOrComputeCachedLeaf(key)(
@@ -1161,11 +1124,12 @@ object Dedup {
       textCol: String, n: Int = 3, occT: Int = 256,
       finalCap: Int = 65536, maxHamming: Int = 3): DataFrame =
     // the signature cache deliberately STAYS for the session (same
-    // contract as simhash()): it is the memo probe's fingerprint input
-    // — see simhashPairsFromSigs. The r14 ADVICE leak finding is
-    // answered by the build releasing its PER-LEVEL intermediates
-    // (the 16 GB class) once the pair relation materializes; the
-    // signature relation is the bounded, load-bearing remainder.
+    // contract as simhash()): a repeat call's ladder memo keys on the
+    // signature leaf and its consumers read it. The r14 ADVICE leak
+    // finding is answered by the build releasing its PER-LEVEL
+    // intermediates (the 16 GB class) once the pair relation
+    // materializes; the signature relation is the bounded,
+    // load-bearing remainder.
     simhashPairsFromSigs(simhashSignatures(df, idCol, textCol, n),
       occT, finalCap, maxHamming)
 
@@ -1217,44 +1181,25 @@ object Dedup {
     require(maxHamming >= 1 && maxHamming <= 15,
       s"maxHamming must be in [1, 15], got $maxHamming")
     val spark = sigs.sparkSession
-    // MEMOIZED on the input CONTENT fingerprint + parameters (the
-    // clusterPairs pattern): the build below runs driver-side jobs
-    // (reps count for start-level sizing, per-level hot-bucket counts,
-    // the eager result materialization), so unlike a pure-lazy
-    // operator a repeat call would re-execute the whole ladder even
-    // though its final union plan-matches the pair cache — measured as
-    // warm ≈ cold (331 vs 390 s) at x100 before this memo. The
-    // fingerprint is ONE cheap job over the (session-cached) signature
-    // relation — which is also why that cache is deliberately kept
-    // alive rather than released after the build: it is what makes a
-    // repeat call's memo probe read ~2 s instead of re-running the
-    // 40 s signature pass. Validity = the result's cache entry is
-    // still live; on full eviction the memo recomputes fresh, on
-    // partial eviction consumers recompute those partitions through
-    // the (unpersisted) intermediate lineage — slow but exact.
-    // PLAN-KEYED fast path in front of the content-keyed memo (the
-    // clusterPairsRounds idiom, round-15): a repeat call with the
-    // semantically-identical signature plan skips the fingerprint job.
-    // The content-keyed memo below stays the ground truth on a miss.
-    val planKey = s"simhashLadderPlan:${ResultCache.sessionId(spark)}:$occT:" +
+    // MEMOIZED on planKey(sigs) + parameters (the clusterPairs
+    // pattern): the build below runs driver-side jobs (reps count for
+    // start-level sizing, per-level hot-bucket counts, the eager result
+    // materialization), so unlike a pure-lazy operator a repeat call
+    // would re-execute the whole ladder even though its final union
+    // plan-matches the pair cache — measured as warm ≈ cold (331 vs
+    // 390 s) at x100 before this memo. A repeat call runs no job here.
+    // Validity = the result's cache entry is still live; on full
+    // eviction the memo recomputes fresh, on partial eviction consumers
+    // recompute those partitions through the (unpersisted) intermediate
+    // lineage — slow but exact. IMR-leaf handle (round-15): consumers
+    // (clusterPairs' edge cache + the reconstruction joins) otherwise
+    // re-analyze the ladder's multi-level union tree on every call —
+    // driver time, executors idle.
+    val key = s"simhashLadder:${ResultCache.sessionId(spark)}:$occT:" +
       s"$finalCap:$maxHamming:$startLevelOverride:" +
       ResultCache.planKey(sigs)
-    // the memo stores (ORIGINAL handle, IMR leaf): validity must probe
-    // the original — the leaf plan is not registered with the
-    // CacheManager, so probing it would always read NONE
-    ResultCache.getOrCompute[(DataFrame, DataFrame)](planKey,
-      { case (orig, _) => ResultCache.isCached(orig) }) {
-      val key = s"simhashLadder:${ResultCache.sessionId(spark)}:$occT:" +
-        s"$finalCap:$maxHamming:$startLevelOverride:" +
-        ResultCache.fingerprintPairs(sigs, "doc_id", "sig")
-      // IMR-leaf handle (round-15): consumers (clusterPairs' edge cache +
-      // the reconstruction joins) otherwise re-analyze the ladder's
-      // multi-level union tree on every call — driver time, executors idle
-      val orig = ResultCache.getOrCompute[DataFrame](key, ResultCache.isCached)(
-        simhashPairsLadderBuild(sigs, occT, finalCap, maxHamming,
-          startLevelOverride))
-      (orig, org.apache.spark.sql.GraftExpressionBridge.cachedLeaf(orig))
-    }._2
+    ResultCache.getOrComputeCachedLeaf(key)(
+      simhashPairsLadderBuild(sigs, occT, finalCap, maxHamming, startLevelOverride))
   }
 
   /** The un-memoized ladder build of [[simhashPairsFromSigs]]. */

@@ -2,13 +2,21 @@ package graft.api
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.hashing.MurmurHash3
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memo for EAGER-LOOP operators — operators whose result
-  * is materialized by a driver-side iteration (connected components,
-  * k-means, PageRank) rather than a single lazy plan.
+/** Session-scoped memo for operators whose result Spark's own cache
+  * cannot deduplicate: EAGER-LOOP operators (connected components,
+  * k-means, the simhash ladder) whose result is materialized by a
+  * driver-side iteration, driver-side values (fitted models, sizing
+  * counts, merge tables), and the handles of cached relations.
   *
   * Why `.cache()` alone is not enough for these: Spark's CacheManager
   * deduplicates by canonicalized PLAN, and an iterative operator's final
@@ -19,13 +27,21 @@ import org.apache.spark.storage.StorageLevel
   * job is a fixed-latency round-trip, so the loop is exactly the part
   * that multiplies under contention — the round-2 graded bench billed
   * the un-memoized cluster loop 26.9 s where a quiet run takes ~1 s).
-  * This memo keys on the INPUT's content fingerprint instead, which is
-  * invariant across invocations.
+  * This memo keys on the INPUT instead: [[planKey]] of the DataFrame
+  * the operator was given, which is invariant across invocations.
   *
   * Contract:
   *   - `key` must determine the result: equal keys ⇒ equal results.
-  *     Callers build keys from [[fingerprintPairs]]-style content
-  *     hashes plus every parameter that affects the output.
+  *     Every caller builds its key from an operator tag, the session
+  *     id, every parameter that affects the output, and [[planKey]]
+  *     of its input — no other input identity (paths, caller-chosen
+  *     strings, content scans) is used anywhere.
+  *   - Refresh: [[planKey]] covers the input's file listing, so a
+  *     fresh read of rewritten files misses every memo. After a data
+  *     refresh `spark.catalog.clearCache()` is still required — for
+  *     Spark's CacheManager, which matches by directory — and is then
+  *     sufficient: memoized handles fail their validity check and
+  *     driver values are keyed off the new listing.
   *   - `stillValid` guards staleness of the CACHED ARTIFACT, not the
   *     key: a memoized DataFrame whose storage was dropped by
   *     `spark.catalog.clearCache()` fails the default check and is
@@ -35,10 +51,11 @@ import org.apache.spark.storage.StorageLevel
   *     racing the SAME cold key may both compute (results are equal by
   *     the key contract; last writer wins) — no lock is held during a
   *     Spark job. Raced callers each get a usable result.
-  *   - Memory: the memo stores DataFrame HANDLES, not data; entries are
-  *     bounded by the number of distinct (input, parameters) pairs seen
-  *     in the session, and the underlying storage is Spark block-cache
-  *     storage — evictable under pressure and dropped by clearCache().
+  *   - Memory: the memo stores DataFrame HANDLES and small driver
+  *     values, not data; entries are bounded by the number of distinct
+  *     (input, parameters) pairs seen in the session, and the
+  *     underlying storage is Spark block-cache storage — evictable
+  *     under pressure and dropped by clearCache().
   */
 object ResultCache {
 
@@ -102,133 +119,72 @@ object ResultCache {
       (orig, org.apache.spark.sql.GraftExpressionBridge.cachedLeaf(orig))
     }._2
 
-  /** Widened plan discriminator for plan-keyed memos (round-15 ADVICE):
-    * `semanticHash()` alone is one 32-bit hash of the canonicalized
-    * plan, so a same-session collision between two same-parameter,
-    * different-input plans would silently serve the wrong memoized
-    * model/handle. This key appends the canonicalized node count and an
-    * independent string hash of the canonicalized tree — a collision now
-    * needs all three to agree. Canonicalization normalizes exprIds, so
-    * semantically-equal plans still produce IDENTICAL keys (the memo
-    * fast path keeps hitting); zero jobs, driver-only. */
-  def planKey(df: DataFrame): String = {
-    val canon = df.queryExecution.analyzed.canonicalized
+  /** The one memo key of the library: a function of the INPUT PLAN
+    * and of the FILES it reads, stable across calls, cache
+    * materialization and `clearCache()` rebuilds. Zero jobs.
+    *
+    * The analyzed plan is canonicalized (exprIds and names erased, so
+    * semantically equal plans key identically) after two rewrites:
+    *   - every InMemoryRelation leaf (a memoized handle, see
+    *     [[getOrComputeCachedLeaf]]) is replaced by the key of the
+    *     logical plan it caches. The leaf itself renders its PHYSICAL
+    *     cached plan, which changes when the cache materializes (AQE's
+    *     `isFinalPlan=false` → `true`) and on every rebuild, so a key
+    *     over it never matched across a lazy leaf's first and second
+    *     use;
+    *   - every file-backed leaf adds its listing: file count, total
+    *     bytes, latest mtime and an order-free hash of (path, size,
+    *     mtime) per file. The canonical plan names the DIRECTORY only,
+    *     so without the listing a memo outlived an in-place refresh.
+    *
+    * The key joins three discriminators of the rewritten plan — the
+    * 32-bit semantic hash, the node count and a string hash of the
+    * full tree rendering (no `maxToStringFields` cap, so wide
+    * projections hash every column) — with the listings: a collision
+    * needs all of them to agree.
+    *
+    * Listing caveats: the listing is the one Spark captured when the
+    * DataFrame was READ (file indexes are cached), so key fresh reads,
+    * not handles created before a refresh; and a writer that rewrites
+    * bytes while keeping path, size and mtime defeats it (no Spark
+    * sink does: writers create new files). Leaves with neither a cache
+    * nor a file index key by their own canonical form: local relations
+    * and ranges by their data or parameters, RDD-backed leaves
+    * (localCheckpoint) by RDD identity. */
+  def planKey(df: DataFrame): String = keyOf(df.queryExecution.analyzed)
+
+  private def keyOf(plan: LogicalPlan): String = {
+    val stable = plan.transformUpWithSubqueries {
+      case imr: InMemoryRelation => CachedInput(keyOf(imr.cacheBuilder.logicalPlan), imr.output)
+    }
+    val listings = stable.collectWithSubqueries {
+      case l: LogicalRelation => l.relation match {
+        case HadoopFsRelation(p: PartitioningAwareFileIndex, _, _, _, _, _) =>
+          val files = p.allFiles()
+          // order-free fold: listing order is not stable
+          val h = files.foldLeft(0L) { (acc, f) =>
+            acc ^ MurmurHash3.stringHash(
+              s"${f.getPath}:${f.getLen}:${f.getModificationTime}").toLong
+          }
+          val mtime = if (files.isEmpty) 0L else files.map(_.getModificationTime).max
+          s"${files.size}:${files.map(_.getLen).sum}:$mtime:$h"
+        case _ => ""
+      }
+    }
+    val canon = stable.canonicalized
     var nodes = 0
     canon.foreach(_ => nodes += 1)
-    s"${canon.semanticHash()}:$nodes:" +
-      s"${scala.util.hashing.MurmurHash3.stringHash(canon.treeString)}"
+    val tree = canon.treeString(verbose = true, maxFields = Int.MaxValue)
+    s"${canon.semanticHash()}:$nodes:${MurmurHash3.stringHash(tree)}" +
+      listings.map("|" + _).mkString
   }
 
-  /** Content fingerprint of a relation in ONE job: row count + two
-    * order-free folds over (row hash, row multiplicity).
-    *
-    * MULTISET-correct by construction: a naive bit_xor over row hashes
-    * cancels any row with even multiplicity (two different relations
-    * could share a fingerprint by each holding a different duplicated
-    * row), so the fold first groups by the full-row xxhash64 — the
-    * partial aggregation collapses on well-distributed 64-bit keys —
-    * and then xors hashes of (row hash, count). Multiplicity enters
-    * the hash, nothing cancels. bit_xor keeps the fold overflow-free
-    * under ANSI mode at any row count; xxhash64 hashes arrays/structs
-    * recursively, so vector columns fingerprint too.
-    *
-    * Collision honesty: the two folds differ structurally (argument
-    * order swaps the hash-chain state), but xxhash64's seed is fixed,
-    * so they are not provably independent — treat the guarantee as
-    * "64-bit hash equality on the (hash, count) multiset", the same
-    * trust class as any single content hash, with the second fold as
-    * a structural cross-check rather than a second 64 bits.
-    *
-    * As a side effect this materializes `df`'s cache if it is marked
-    * for caching — callers exploit that to fold fingerprinting into
-    * the materialization job they would run anyway. */
-  def fingerprintRelation(df: DataFrame): String = {
-    // quoted-identifier escaping (` → ``) so a column name containing
-    // a backtick (or dot) resolves as the literal top-level column
-    // instead of breaking the parse / resolving as a nested field
-    val cols = df.columns.map(c => col(s"`${c.replace("`", "``")}`"))
-    val r = df
-      .select(xxhash64(scala.collection.immutable.ArraySeq.unsafeWrapArray(cols): _*).as("__h"))
-      .groupBy(col("__h")).agg(count(lit(1)).as("__m"))
-      .agg(
-        expr("sum(__m)").as("n"),
-        expr("bit_xor(xxhash64(__h, __m))").as("h1"),
-        expr("bit_xor(xxhash64(__m, __h))").as("h2")).head()
-    val n = if (r.isNullAt(0)) 0L else r.getLong(0)
-    val h1 = if (r.isNullAt(1)) "e" else r.getLong(1).toString
-    val h2 = if (r.isNullAt(2)) "e" else r.getLong(2).toString
-    s"$n:$h1:$h2"
+  /** Stand-in for a cached leaf inside [[planKey]]: the key of the
+    * cached logical plan plus the leaf's output, normalized like a
+    * relation's output so parents canonicalize against it. Never
+    * analyzed, optimized or executed. */
+  private case class CachedInput(key: String, output: Seq[Attribute]) extends LeafNode {
+    override protected def doCanonicalize(): LogicalPlan =
+      copy(output = output.map(QueryPlan.normalizeExpressions(_, output)))
   }
-
-  /** [[fingerprintRelation]] restricted to an edge/pair list's two key
-    * columns. */
-  def fingerprintPairs(df: DataFrame, aCol: String, bCol: String): String =
-    fingerprintRelation(df.select(col(aCol), col(bCol)))
-
-  /** CATALOG-METADATA fingerprint for file-backed relations — the
-    * 100 TB alternative to [[fingerprintRelation]]: a content
-    * fingerprint is one full pass over the input, which at graded
-    * scale folds into a materialization the caller runs anyway, but at
-    * 100 TB a memo HIT would still pay a full scan just to prove the
-    * key. This variant keys on what the filesystem already knows —
-    * per file-index leaf: file count, total bytes, max modification
-    * time, and an order-free hash of (path, size, mtime) per file —
-    * O(listing), zero data read.
-    *
-    * Returns None unless EVERY leaf of the optimized plan is a
-    * file-index relation (cached/local/DSv2 leaves have no catalog
-    * metadata; callers fall back to content fingerprinting — see
-    * [[fingerprintAuto]]).
-    *
-    * Staleness contract: any change to the file SET, any file's size,
-    * or any file's mtime changes the fingerprint (an overwrite with
-    * byte-identical content still recomputes — safe, merely
-    * non-minimal). Two caveats a caller must know:
-    *   - the listing is the one captured when the DataFrame was
-    *     CONSTRUCTED (Spark caches file indexes); fingerprint fresh
-    *     reads, not handles created before a refresh — standard Spark
-    *     listing semantics.
-    *   - a writer that mutates bytes in place while preserving path,
-    *     size AND mtime defeats it; no Spark-supported sink does that
-    *     on a normal write (parquet/orc/csv writers create new files).
-    * Unlike [[fingerprintRelation]] the key ignores pending per-row
-    * transformations — it identifies the INPUT FILES, so use it to key
-    * "derived artifact of these files" memos (cluster labels, k-means
-    * models, bloom filters), not value-equality of arbitrary plans. */
-  def fingerprintFileMeta(df: DataFrame): Option[String] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val perLeaf = df.queryExecution.optimizedPlan.collectLeaves().map {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location match {
-            case p: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =>
-              val files = p.allFiles()
-              // order-free fold (file listing order is not stable):
-              // xor of per-file hashes of (path, len, mtime)
-              val h = files.foldLeft(0L) { (acc, f) =>
-                acc ^ scala.util.hashing.MurmurHash3.stringHash(
-                  s"${f.getPath}:${f.getLen}:${f.getModificationTime}").toLong
-              }
-              val mtime = if (files.isEmpty) 0L else files.map(_.getModificationTime).max
-              Some(s"${files.size}:${files.map(_.getLen).sum}:$mtime:$h")
-            case _ => None
-          }
-        case _ => None
-      }
-      case _ => None
-    }
-    if (perLeaf.isEmpty || perLeaf.exists(_.isEmpty)) None
-    else Some(perLeaf.flatten.sorted.mkString("|"))
-  }
-
-  /** The documented default for memo keys over possibly-file-backed
-    * inputs: catalog metadata when every leaf is a file relation
-    * (O(listing)), content otherwise (O(scan)). The returned key is
-    * prefixed with which scheme produced it — a metadata key and a
-    * content key must never collide. */
-  def fingerprintAuto(df: DataFrame): String =
-    fingerprintFileMeta(df) match {
-      case Some(meta) => s"meta/$meta"
-      case None => s"content/${fingerprintRelation(df)}"
-    }
 }

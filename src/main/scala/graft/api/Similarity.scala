@@ -591,26 +591,15 @@ object Similarity {
     * division of exact operands), an empty cell keeps its centroid.
     * `iters` counts total assignment passes — the final one is the
     * caller's bucketing pass. Driver traffic is the MODEL only
-    * (nCells × dim doubles per round). MEMOIZED per corpus fingerprint
-    * + parameters: the fit is a driver-side loop (one collect job per
-    * round) that plan caching cannot deduplicate. */
+    * (nCells × dim doubles per round). MEMOIZED per
+    * [[ResultCache.planKey]] of the (memoized) quantized corpus +
+    * parameters: the fit is a driver-side loop (one collect job per
+    * round) that plan caching cannot deduplicate; a repeat call over
+    * the same corpus runs no fit job. */
   private def ivfFitInt(qemb: DataFrame, nCells: Int,
       iters: Int): IndexedSeq[Array[Double]] = {
-    // plan-keyed fast path (round-15): the content fingerprint is one
-    // job per CALL even on a memo hit; with quantEmb's handle now
-    // memoized, the plan hash identifies the corpus without a job
-    // (same-session determinism assumption as the other plan memos)
-    val planKey = s"ivfFitIntPlan:${ResultCache.sessionId(qemb.sparkSession)}:" +
+    val key = s"ivfFitInt:${ResultCache.sessionId(qemb.sparkSession)}:" +
       s"$nCells:$iters:${ResultCache.planKey(qemb)}"
-    ResultCache.getOrCompute[IndexedSeq[Array[Double]]](planKey, _ => true) {
-      ivfFitIntByContent(qemb, nCells, iters)
-    }
-  }
-
-  /** The content-fingerprint-keyed fit memo of [[ivfFitInt]]. */
-  private def ivfFitIntByContent(qemb: DataFrame, nCells: Int,
-      iters: Int): IndexedSeq[Array[Double]] = {
-    val key = s"ivfFitInt:$nCells:$iters:${ResultCache.fingerprintRelation(qemb)}"
     ResultCache.getOrCompute[IndexedSeq[Array[Double]]](key, _ => true) {
       var cents: IndexedSeq[Array[Double]] = qemb
         .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
@@ -686,8 +675,8 @@ object Similarity {
     * normalize + quantize pass) rather than convert to unbounded disk
     * spill in a long-lived session fitting over many distinct corpora.
     * One entry per distinct input; clearCache() guidance as for
-    * sketchEmb. The fit's fingerprint job materializes it; repeat
-    * calls and annIvfPq's identical quantEmb plan cache-match it. */
+    * sketchEmb. The fit's first pass materializes it; repeat calls and
+    * annIvfPq share the memoized handle. */
   private[graft] def ivfCandidates(df: DataFrame, idCol: String, vecCol: String,
       probeId: Long, nCells: Int, nProbe: Int, iters: Int): DataFrame = {
     val qemb = quantEmb(df, idCol, vecCol) // memoized MEMORY_ONLY handle
@@ -796,10 +785,10 @@ object Similarity {
       iters: Int): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
     // plan-keyed model memo (round-15, the ivfFitInt treatment): the
     // bounded-sample collect + driver Lloyd loop re-ran on every call
-    val planKey = s"pqFitIntPlan:${ResultCache.sessionId(qemb.sparkSession)}:" +
+    val key = s"pqFitInt:${ResultCache.sessionId(qemb.sparkSession)}:" +
       s"$m:$k:$iters:${ResultCache.planKey(qemb)}"
     ResultCache.getOrCompute[IndexedSeq[IndexedSeq[IndexedSeq[Double]]]](
-      planKey, _ => true)(pqFitIntBuild(qemb, m, k, iters))
+      key, _ => true)(pqFitIntBuild(qemb, m, k, iters))
   }
 
   /** The un-memoized sample + Lloyd loop of [[pqFitInt]]. */

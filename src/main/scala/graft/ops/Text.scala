@@ -663,13 +663,20 @@ object Text {
     * replay generator so the two can never drift. */
   private[graft] val BpeMergeCount = 12
 
-  private def bpeMergesFor(spark: SparkSession, dir: String): Seq[BpeMerge] =
+  /** Memo key of a per-corpus relation or value: operator tag +
+    * session + [[api.ResultCache.planKey]] of the documents. */
+  private def corpusKey(tag: String, docs: DataFrame): String =
+    s"$tag:${api.ResultCache.sessionId(docs.sparkSession)}:${api.ResultCache.planKey(docs)}"
+
+  private def bpeMergesFor(spark: SparkSession, dir: String): Seq[BpeMerge] = {
+    val docs = Tables.documents(spark, dir)
     api.ResultCache.getOrCompute[Seq[BpeMerge]](
-      s"bpe:${api.ResultCache.sessionId(spark)}:$dir:$BpeMergeCount", _ => true)(
+      corpusKey(s"bpe$BpeMergeCount", docs), _ => true)(
       // the delta trainer's merge table is spec-pinned EQUAL to the
       // sequential one, so the graded queries and their oracle replay
       // are unchanged — only the per-superstep cost drops
-      bpeTrainDelta(bpeWords(Tables.documents(spark, dir)), BpeMergeCount)._1)
+      bpeTrainDelta(bpeWords(docs), BpeMergeCount)._1)
+  }
 
   /** The trained (word → subtoken count) relation both consuming
     * queries broadcast — built ONCE per shape (textBpeTokens and
@@ -920,12 +927,11 @@ object Text {
     // still shuffles by token but never sorts the stream.
     val dfreq = tf.groupBy($"token").agg(count(lit(1)).as("df")).cache()
     // the count is a property of the CORPUS, not of any cached handle,
-    // so it memoizes per (session, dir) — shared with unigramLL's model
-    // count (same tokenization ⇒ same vocabulary) so a session running
-    // both token-scoring queries pays the sizing job once, and a warm
-    // repeat call stays at its plan-match job count
-    val nVocab: Long = api.ResultCache.getOrCompute[java.lang.Long](
-      s"vocabCount:${api.ResultCache.sessionId(spark)}:$dir", _ => true)(dfreq.count())
+    // so it memoizes per (session, corpus) — shared with unigramLL's
+    // model count (same tokenization ⇒ same vocabulary) so a session
+    // running both token-scoring queries pays the sizing job once, and
+    // a warm repeat call stays at its plan-match job count
+    val nVocab: Long = vocabCount(docs)(dfreq.count())
     val dfr =
       if (nVocab <= 2000000L) broadcast(dfreq) else dfreq.hint("SHUFFLE_HASH")
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -1034,7 +1040,8 @@ object Text {
     * as the oracle replay). */
   def textUnigramLL(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tok = tokenRuns(Tables.documents(spark, dir))
+    val docs = Tables.documents(spark, dir)
+    val tok = tokenRuns(docs)
       .select($"doc_id", explode($"rl").as("e"))
       .select($"doc_id", $"e.token".as("w"), $"e.tf".as("rtf"))
     // vocabulary-sized model, corpus-sized estimate: same trap as
@@ -1050,8 +1057,7 @@ object Text {
     val model = tok.groupBy($"w").agg(sum($"rtf").as("tf")).cache()
     // same memo key as textTfidf's idf sizing: identical tokenization,
     // identical vocabulary count
-    val nVocab: Long = api.ResultCache.getOrCompute[java.lang.Long](
-      s"vocabCount:${api.ResultCache.sessionId(spark)}:$dir", _ => true)(model.count())
+    val nVocab: Long = vocabCount(docs)(model.count())
     val modelB =
       if (nVocab <= 2000000L) broadcast(model) else model.hint("SHUFFLE_HASH")
     val total = model.agg(sum($"tf").as("total"))
@@ -1094,8 +1100,7 @@ object Text {
     * Docs with < 2 tokens have no bigrams and drop out of BOTH engines
     * (empty run array here, empty range() in the replay). */
   def textBigramLL(spark: SparkSession, dir: String): DataFrame =
-    bigramNll(Tables.documents(spark, dir),
-      memoBase = s"${api.ResultCache.sessionId(spark)}:$dir")
+    bigramNll(Tables.documents(spark, dir))
 
   /** Dense dictionary ids for the corpus vocabulary — the id side of
     * the round-10 n-gram model dictionary encoding (the §18.9/§18.13
@@ -1126,9 +1131,8 @@ object Text {
     // vocab feeds every dictionary-encode consumer (tfidf, unigram/
     // bigram models, pmi decode) — each rebuilt + re-analyzed this
     // window-over-bucket tree per call
-    val key = s"tokenVocab:${api.ResultCache.sessionId(docs.sparkSession)}:" +
-      graft.api.ResultCache.planKey(docs)
-    api.ResultCache.getOrComputeCachedLeaf(key)(tokenVocabBuild(docs))
+    api.ResultCache.getOrComputeCachedLeaf(corpusKey("tokenVocab", docs))(
+      tokenVocabBuild(docs))
   }
 
   /** The un-memoized vocabulary build of [[tokenVocab]]. */
@@ -1150,12 +1154,18 @@ object Text {
       .cache()
   }
 
+  /** The corpus vocabulary size, memoized per (session, corpus): every
+    * tokenization of `docs` the token-scoring queries use yields the
+    * same vocabulary, so they share one sizing count. */
+  private def vocabCount(docs: DataFrame)(count: => Long): Long =
+    api.ResultCache.getOrCompute[java.lang.Long](
+      corpusKey("vocabCount", docs), _ => true)(count)
+
   /** The vocabulary with its memoized size (the broadcast-gate count,
     * shared with textTfidf/textUnigramLL's identical-vocabulary memo). */
-  private def vocabWithCount(docs: DataFrame, memoBase: String): (DataFrame, Long) = {
+  private def vocabWithCount(docs: DataFrame): (DataFrame, Long) = {
     val vocab = tokenVocab(docs)
-    val nVocab: Long = api.ResultCache.getOrCompute[java.lang.Long](
-      s"vocabCount:$memoBase", _ => true)(vocab.count())
+    val nVocab: Long = vocabCount(docs)(vocab.count())
     require(nVocab < Int.MaxValue.toLong,
       s"n-gram dictionary encoding requires vocabulary < 2^31 tokens (got $nVocab)")
     (vocab, nVocab)
@@ -1180,18 +1190,18 @@ object Text {
     * the string-array rows were, and narrow rows are exactly the shape
     * the DISK_ONLY serializer handles without the batch-retention
     * pathology ([[graft.api.Persists]]). */
-  private def bigramRunsEnc(docs: DataFrame, memoBase: String): DataFrame = {
+  private def bigramRunsEnc(docs: DataFrame): DataFrame = {
     // handle memo + IMR-leaf (round-15): rebuilt per call by pmi AND
     // the bigram-ll family; the persist already plan-matched, the
     // rebuild + re-analysis did not
-    api.ResultCache.getOrComputeCachedLeaf(s"bigramRunsEnc:$memoBase")(
-      bigramRunsEncBuild(docs, memoBase))
+    api.ResultCache.getOrComputeCachedLeaf(corpusKey("bigramRunsEnc", docs))(
+      bigramRunsEncBuild(docs))
   }
 
   /** The un-memoized encode of [[bigramRunsEnc]]. */
-  private def bigramRunsEncBuild(docs: DataFrame, memoBase: String): DataFrame = {
+  private def bigramRunsEncBuild(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val (vocab, nVocab) = vocabWithCount(docs, memoBase)
+    val (vocab, nVocab) = vocabWithCount(docs)
     def vocabB(wAs: String, idAs: String) = {
       val r = vocab.select($"w".as(wAs), $"wid".as(idAs))
       if (nVocab <= 2000000L) broadcast(r) else r
@@ -1220,23 +1230,23 @@ object Text {
     * bigrams in 50M positions), and in-memory unroll of a corpus-sized
     * relation starves the very aggregate that builds it (x100/8g:
     * AGGREGATE_OUT_OF_MEMORY, round-9 measurement). Two longs a row. */
-  private def bigramModelEnc(docs: DataFrame, memoBase: String): DataFrame = {
+  private def bigramModelEnc(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     // handle memo + IMR-leaf (round-15) — see [[bigramRunsEnc]]
-    api.ResultCache.getOrComputeCachedLeaf(s"bigramModelEnc:$memoBase")(
-      bigramRunsEnc(docs, memoBase)
+    api.ResultCache.getOrComputeCachedLeaf(corpusKey("bigramModelEnc", docs))(
+      bigramRunsEnc(docs)
         .groupBy($"bid").agg(sum($"rtf").as("cbg"))
         .transform(graft.api.Persists.diskOnly))
   }
 
-  /** Core of [[textBigramLL]] over any (doc_id, text) relation.
-    * `memoBase` scopes the memoized sizing counts per (session, corpus). */
-  private[graft] def bigramNll(docs: DataFrame, memoBase: String): DataFrame = {
+  /** Core of [[textBigramLL]] over any (doc_id, text) relation; the
+    * sizing counts memoize per (session, corpus). */
+  private[graft] def bigramNll(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val bg = bigramRunsEnc(docs, memoBase)
-    val model = bigramModelEnc(docs, memoBase)
+    val bg = bigramRunsEnc(docs)
+    val model = bigramModelEnc(docs)
     val nBigrams: Long = api.ResultCache.getOrCompute[java.lang.Long](
-      s"bigramCount:$memoBase", _ => true)(model.count())
+      corpusKey("bigramCount", docs), _ => true)(model.count())
     // The bigram "vocabulary" is NOT vocab-sized on adversarial corpora
     // (see [[bigramModelEnc]]) — a corpus-sized model. A SHUFFLE_HASH
     // fallback there builds ~860k-key hash maps in all 32 tasks at once
@@ -1258,7 +1268,7 @@ object Text {
       .agg(sum($"cbg").as("cw1"))
       .cache()
     val nLeft: Long = api.ResultCache.getOrCompute[java.lang.Long](
-      s"bigramCount:$memoBase:left", _ => true)(left.count())
+      corpusKey("bigramLeftCount", docs), _ => true)(left.count())
     val leftB = if (nLeft <= 2000000L) broadcast(left) else left
     bg.join(modelB, "bid")
       .withColumn("w1id", shiftright($"bid", 32))
@@ -1304,14 +1314,13 @@ object Text {
   def textPmi(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-    val memoBase = s"${api.ResultCache.sessionId(spark)}:$dir"
     // corpus bigram model (packed-id keys) — identical plan to
     // bigramNll's, so the CacheManager shares one tokenize + one encode
     // + one aggregate between them
-    val big = bigramModelEnc(docs, memoBase)
+    val big = bigramModelEnc(docs)
     // the dictionary, for DECODING the few surviving candidates back to
     // strings (same cached relation the encode side used)
-    val (vocab, nVocab) = vocabWithCount(docs, memoBase)
+    val (vocab, nVocab) = vocabWithCount(docs)
     def vocabDec(idAs: String, wAs: String) = {
       val r = vocab.select($"wid".as(idAs), $"w".as(wAs))
       if (nVocab <= 2000000L) broadcast(r) else r
@@ -1328,7 +1337,7 @@ object Text {
     // span and the groupBy's partial agg collapses to vocab size
     // in-task, so nothing corpus-sized materializes anywhere.)
     // handle memo + IMR-leaf (round-15) — see [[bigramRunsEnc]]
-    val uni = api.ResultCache.getOrComputeCachedLeaf(s"pmiUni:$memoBase")(
+    val uni = api.ResultCache.getOrComputeCachedLeaf(corpusKey("pmiUni", docs))(
       api.Dedup.spread(docs)
         .select(explode(org.apache.spark.sql.GraftExpressionBridge.column(
           graft.plans.TokenRunLengths(
@@ -2096,16 +2105,13 @@ object Text {
     * search exchange carries 8-byte digests, and the one string
     * exchange happens at a single length. */
   def textLongestDupSpan(spark: SparkSession, dir: String): DataFrame =
-    longestDupSpan(Tables.documents(spark, dir),
-      memoBase = s"${api.ResultCache.sessionId(spark)}:$dir")
+    longestDupSpan(Tables.documents(spark, dir))
 
-  /** `memoBase` (nullable): when set, the FOUND LENGTH memoizes per
-    * (session, corpus) — the binary search's ~log2(maxlen) jobs run
-    * once and a repeat call goes straight to the (plan-cached) string
-    * grouping at that length, the same warm-repeat contract as the
-    * dedup family's finals. Library callers on ad-hoc relations leave
-    * it null (no safe cache key exists for an arbitrary plan). */
-  private[graft] def longestDupSpan(docs: DataFrame, memoBase: String = null): DataFrame = {
+  /** The FOUND LENGTH memoizes per (session, corpus) — the binary
+    * search's ~log2(maxlen) jobs run once and a repeat call goes
+    * straight to the (plan-cached) string grouping at that length, the
+    * same warm-repeat contract as the dedup family's finals. */
+  private[graft] def longestDupSpan(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val toksRel = api.Dedup.spread(docs)
@@ -2206,10 +2212,8 @@ object Text {
         best
       } finally if (relPersisted != null) relPersisted.unpersist()
     }
-    val best: Int =
-      if (memoBase == null) search()
-      else api.ResultCache.getOrCompute[java.lang.Integer](
-        s"ldspan:$memoBase", _ => true)(Int.box(search())).intValue()
+    val best: Int = api.ResultCache.getOrCompute[java.lang.Integer](
+      corpusKey("ldspan", docs), _ => true)(Int.box(search())).intValue()
     if (best == 0)
       spark.emptyDataFrame
         .select(lit("").as("span"), lit(0).as("span_len"),

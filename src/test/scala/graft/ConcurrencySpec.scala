@@ -89,67 +89,6 @@ class ConcurrencySpec extends SparkSpec {
     assert(computes.get() == after, "warm caller recomputed despite a valid memo entry")
   }
 
-  test("ResultCache fingerprints: order-invariant, content-sensitive, array-aware") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // the memo keys for clusterPairs and ivfFitInt rest on exactly
-    // these three properties: same content in any row order → same
-    // key; any changed value (including inside an array column, the
-    // ivfFitInt case) → different key
-    val rows = Seq((1L, Array(0.1, 0.2)), (2L, Array(0.3, 0.4)), (3L, Array(0.5, 0.6)))
-    val a = rows.toDF("id", "v")
-    val shuffled = rows.reverse.toDF("id", "v").orderBy(rand(42)) // any order
-    val fpA = graft.api.ResultCache.fingerprintRelation(a)
-    assert(fpA == graft.api.ResultCache.fingerprintRelation(shuffled),
-      "fingerprint must not depend on row order")
-    val changedScalar = Seq((1L, Array(0.1, 0.2)), (2L, Array(0.3, 0.4)), (9L, Array(0.5, 0.6)))
-      .toDF("id", "v")
-    assert(fpA != graft.api.ResultCache.fingerprintRelation(changedScalar),
-      "fingerprint must change when a scalar changes")
-    val changedArray = Seq((1L, Array(0.1, 0.2)), (2L, Array(0.3, 0.4)), (3L, Array(0.5, 0.7)))
-      .toDF("id", "v")
-    assert(fpA != graft.api.ResultCache.fingerprintRelation(changedArray),
-      "fingerprint must change when an array element changes")
-    val empty = rows.take(0).toDF("id", "v")
-    assert(graft.api.ResultCache.fingerprintRelation(empty)
-      == graft.api.ResultCache.fingerprintRelation(empty), "empty input must fingerprint stably")
-  }
-
-  test("fingerprintFileMeta: stable for unchanged files, changes on rewrite, None off files") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_meta_fp").toString
-    try {
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")
-        .write.mode("overwrite").parquet(s"$dir/t")
-      def fresh() = spark.read.parquet(s"$dir/t")
-      val fp1 = graft.api.ResultCache.fingerprintFileMeta(fresh())
-      assert(fp1.isDefined, "parquet-backed relation must metadata-fingerprint")
-      // unchanged files → same key, including through per-row
-      // transformations (the key identifies the INPUT FILES — that is
-      // the documented contract, not plan equality)
-      assert(fp1 == graft.api.ResultCache.fingerprintFileMeta(
-        fresh().filter(col("id") > 1)), "unchanged files must key identically")
-      // rewrite with different content: file set/sizes/mtimes change —
-      // a FRESH read must produce a different key (staleness test:
-      // "touch a file → recompute")
-      Seq((1L, "a"), (2L, "b"), (3L, "CHANGED")).toDF("id", "s")
-        .write.mode("overwrite").parquet(s"$dir/t")
-      val fp2 = graft.api.ResultCache.fingerprintFileMeta(fresh())
-      assert(fp2.isDefined && fp1 != fp2, s"rewrite must change the key: $fp1 vs $fp2")
-      // a non-file leaf (local relation) must refuse, and the auto
-      // variant must fall back to a content key with a distinct prefix
-      val local = Seq((1L, "a")).toDF("id", "s")
-      assert(graft.api.ResultCache.fingerprintFileMeta(local).isEmpty,
-        "local relation has no catalog metadata to key on")
-      assert(graft.api.ResultCache.fingerprintAuto(local).startsWith("content/"))
-      assert(graft.api.ResultCache.fingerprintAuto(fresh()).startsWith("meta/"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      ()
-    }
-  }
-
   test("clusterPairs memo: identical input replays from the memo in ≤ 4 jobs; clearCache invalidates") {
     // job counter with an explicit listener-bus drain (events are
     // delivered asynchronously; without the drain, counts attribute to
@@ -171,8 +110,8 @@ class ConcurrencySpec extends SparkSpec {
       while (cur != prev) { Thread.sleep(20); prev = cur; cur = jobs.get() }
       cur
     }
-    // a real parquet source (a local relation constant-folds and the
-    // fingerprint scan would prove nothing about scan-backed inputs)
+    // a real parquet source: the memo key of a scan-backed input
+    // includes its file listing
     val tmp = java.nio.file.Files.createTempDirectory("graft_memo_pairs").toString
     try {
       import spark.implicits._
@@ -185,11 +124,9 @@ class ConcurrencySpec extends SparkSpec {
       val warm = graft.api.Dedup.clusterPairs(pairs, "a_id", "b_id").collect().toSeq
       val warmJobs = drained() - before
       assert(warm == cold, "memoized result differs from the computed one")
-      // localCheckpoint materialization + fingerprint job + result
-      // collect (+ a stage Spark may split off re-materializing fwd's
-      // cache) — the propagation rounds must NOT re-run (they alone
-      // would exceed this bound)
-      assert(warmJobs <= 5, s"warm clusterPairs ran $warmJobs jobs — memo did not serve")
+      // the plan-keyed memo serves the labels: only the result collect
+      // runs — no cache, localCheckpoint or propagation round
+      assert(warmJobs <= 1, s"warm clusterPairs ran $warmJobs jobs — memo did not serve")
       // invalidation: dropping the cached labels must force a correct
       // recompute, never a stale or broken replay
       spark.catalog.clearCache()

@@ -255,7 +255,7 @@ class TextVectorSpec extends SparkSpec {
       (1L, "a b c"),     // "a b", "b c"
       (2L, "solo"),      // no bigrams -> absent
     ).toDF("doc_id", "text")
-    val out = graft.ops.Text.bigramNll(docs, memoBase = "test:tiny")
+    val out = graft.ops.Text.bigramNll(docs)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     // corpus bigram counts: "a b"->3, "b a"->1, "b c"->1; left: a->3, b->2
     def nll(cbg: Double, cw1: Double) = -math.log(cbg / cw1)
