@@ -105,8 +105,8 @@ object Graph {
     * edges and triangles in one aggregate.
     *
     * Id orientation suffices here because basket-derived degrees are
-    * small and uniform; on skewed graphs orient by (degree, id), which
-    * caps out-degree at O(√edges) — see [[countTriangles]]. The oracle
+    * small and uniform; should a skewed-graph caller appear, orienting
+    * by (degree, id) caps out-degree at O(√edges). The oracle
     * replays the count with a wedge join and EXISTS, independently
     * derived. Three integer counts, one row, engine-exact.
     */
@@ -124,42 +124,6 @@ object Graph {
       // 1-row final cached — repeat calls skip the whole kernel (same
       // steady-state contract as the dedup family)
       .cache()
-  }
-
-  /** Count triangles in an UNDIRECTED edge list (rows (a, b), a ≠ b,
-    * either or both directions may be present) with a caller-chosen
-    * orientation. Orientation assigns each undirected edge exactly one
-    * direction by a total order on nodes, so the count
-    * ([[orientedTriangles]]) is orientation-INVARIANT — but the size of
-    * the forward-neighbour sets is not: out-degree under id order is
-    * unbounded on skewed graphs, while ordering nodes by (degree, id)
-    * caps oriented out-degree at O(√edges), the classic worst-case
-    * bound. PropertySpec pins the invariance on random graphs.
-    */
-  private[graft] def countTriangles(undirected: DataFrame,
-      byDegree: Boolean): Long = {
-    val spark = undirected.sparkSession
-    import spark.implicits._
-    val canon = undirected.select(
-      least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
-      .filter($"u" =!= $"v").distinct()
-    val oriented =
-      if (!byDegree) canon.select($"u".as("p1"), $"v".as("p2"))
-      else {
-        // total degree per node over the undirected edge set, then
-        // orient low-(deg, id) → high-(deg, id)
-        val deg = canon.select($"u".as("n")).union(canon.select($"v".as("n")))
-          .groupBy($"n").agg(count(lit(1)).as("d"))
-        canon
-          .join(deg.select($"n".as("u"), $"d".as("du")), "u")
-          .join(deg.select($"n".as("v"), $"d".as("dv")), "v")
-          .select(
-            when($"du" < $"dv" || ($"du" === $"dv" && $"u" < $"v"), $"u")
-              .otherwise($"v").as("p1"),
-            when($"du" < $"dv" || ($"du" === $"dv" && $"u" < $"v"), $"v")
-              .otherwise($"u").as("p2"))
-      }
-    orientedTriangles(oriented).head().getAs[Long]("n_triangles")
   }
 
   /** 3 fixed iterations from a uniform 1 000 000 start; top 20 by rank
@@ -189,47 +153,5 @@ object Graph {
     for (_ <- 1 to 3)
       ranks = pageRankIterate(e, deg, nodes, ranks).cache()
     ranks.orderBy($"pr".desc, $"node").limit(20)
-  }
-
-  /** Tolerance-terminated PageRank — the production mode, alongside the
-    * fixed-3 graded row: iterate until the total L1 rank movement drops
-    * below `epsMicro` (micro-units, 1.0 ≡ 1 000 000) or `maxSupersteps`
-    * is hit. Integer fixed-point arithmetic is preserved, so the
-    * iterates are engine-exact AND the map eventually reaches an exact
-    * integer fixpoint (truncation quantizes the tail — delta hits 0,
-    * not merely "small"); the ranks returned carry no float drift.
-    *
-    * Superstep cost = the graded row's (one co-keyed join + one
-    * sum-by-dst exchange) plus ONE delta aggregate that reads the
-    * freshly materialized iterate from its localCheckpoint (never
-    * recomputes the chain). The driver holds a single long per round —
-    * the classic Pregel aggregator, the one piece of state a
-    * convergence test NEEDS on the driver. Lineage is truncated every
-    * round (localCheckpoint) and the previous iterate unpersisted, so
-    * plan size and storage stay O(1) in rounds — the clusterPairs
-    * pointer-jumping lessons applied to the rank loop. Returns the
-    * final ranks and the superstep count. PropertySpec pins convergence
-    * and fixed-iteration agreement on random graphs. */
-  private[graft] def pageRankConverged(edges: DataFrame,
-      epsMicro: Long = 1000L, maxSupersteps: Int = 100): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.cache()
-    val deg = e.groupBy($"src").agg(count(lit(1)).as("deg")).cache()
-    val nodes = e.select($"src".as("node")).union(e.select($"dst".as("node")))
-      .distinct().cache()
-    var ranks = nodes.withColumn("pr", lit(1000000L)).localCheckpoint()
-    var it = 0
-    var delta = Long.MaxValue
-    while (it < maxSupersteps && delta >= epsMicro) {
-      val next = pageRankIterate(e, deg, nodes, ranks).localCheckpoint()
-      delta = next.join(ranks.select($"node", $"pr".as("prev")), "node")
-        .agg(coalesce(sum(abs($"pr" - $"prev")), lit(0L)).as("d"))
-        .collect()(0).getLong(0)
-      ranks.unpersist()
-      ranks = next
-      it += 1
-    }
-    (ranks, it)
   }
 }

@@ -196,18 +196,13 @@ object Text {
   }
 
   // ===========================================================================
-  // BPE tokenizer training (the real byte-pair-merge algorithm — replaces
-  // nothing: q_text_tokens_bpe keeps its honest regex proxy; these two
-  // queries grade the TRAINED tokenizer)
+  // BPE tokenizer training: the real byte-pair-merge algorithm, one
+  // trainer ([[bpeTrain]]). q_text_tokens_bpe keeps its regex proxy;
+  // q_text_bpe_train / _tokens / _fertility and q_pack_chunks_bpe grade
+  // the TRAINED tokenizer.
   // ===========================================================================
 
-  /** One learned merge: at `step` (1-based), the adjacent symbol pair
-    * (lhs, rhs) had the corpus-maximal weighted count `pair_count` and
-    * was fused into `merged` = lhs+rhs. */
-  private[graft] final case class BpeMerge(
-    step: Int, lhs: String, rhs: String, merged: String, pair_count: Long)
-
-  /** Internal symbol-string representation: each word rendered as its
+  /** Symbol-string representation: each word rendered as its
     * symbol sequence joined with DOUBLE spaces and double-space
     *-padded at both ends ("ab" → "␣␣a␣␣b␣␣"). The representation is
     * chosen so that applying a merge (a,b) → ab is ONE engine-native
@@ -241,89 +236,16 @@ object Text {
       .cache()
   }
 
-  /** Distributed BPE training (Sennrich, Haddow & Birch 2016, the
-    * word-frequency formulation of Gage 1994): `nMerges` supersteps,
-    * each = one vocab-bounded pair-count aggregate (explode of
-    * adjacent symbol pairs weighted by word frequency, partial-agg
-    * collapsed to |pair vocab| per task before the exchange) + ONE
-    * 1-row argmax collect (cnt DESC, then (lhs, rhs) ASC — integer
-    * counts and binary string order, so every decision is exact and
-    * the DuckDB oracle replays all of them as chained CTEs, the
-    * q_sim_mmr pattern) + one narrow per-row replace. Loop discipline
-    * is the pageRank/clusterPairs one: the corpus is touched once
-    * (bpeWords), the iterated relation is cached-vocab-bounded, and
-    * lineage is truncated by localCheckpoint every 8 supersteps so
-    * plan growth stays bounded at any merge count.
+  /** Superstep admission: from the top-M pair counts
+    * `rows`, ranked by classic BPE's tie-break (cnt DESC, (l, r) ASC),
+    * admit a prefix of mutually-safe merges — at most `limit`, numbered
+    * from `stepBase` + 1 — whose application yields EXACTLY the merges
+    * one-at-a-time greedy BPE would make next.
     *
-    * 100 TB shape: the only corpus-sized stage is the initial word
-    * count (digest-free: words ARE the aggregation key, and partial
-    * aggregation collapses each task to its distinct words before the
-    * exchange). Training then runs on the |vocab|-row relation —
-    * at web scale ~10^7–10^8 rows, a fraction of one executor's
-    * input split — with one bounded shuffle per merge.
-    *
-    * Returns the learned merge table; memoized per (session, corpus
-    * dir) so the train and apply queries share one training run. */
-  private[graft] def bpeTrain(words: DataFrame, nMerges: Int): Seq[BpeMerge] = {
-    import words.sparkSession.implicits._
-    var cur = words
-    var checkpointed: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
-      val top = cur
-        .select($"freq", bpeSymArray($"syms").as("sy"))
-        .select($"freq", explode(expr(
-          """case when size(sy) >= 2
-            |  then transform(sequence(1, size(sy) - 1),
-            |                 i -> struct(sy[i - 1] as l, sy[i] as r))
-            |  else array(cast(null as struct<l: string, r: string>)) end"""
-            .stripMargin)).as("p"))
-        .filter($"p".isNotNull)
-        .groupBy($"p.l".as("l"), $"p.r".as("r"))
-        .agg(sum($"freq").as("cnt"))
-        .orderBy($"cnt".desc, $"l", $"r")
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        // symbols are spliced into a SQL literal below: anything outside
-        // the corpus' plain-token alphabet must fail loudly, not inject
-        require(!(l + r).exists(c => c == '\'' || c == '\\' || c.isWhitespace),
-          s"BPE symbol contains a quote/backslash/space: '$l' + '$r'")
-        merges += BpeMerge(step, l, r, l + r, cnt)
-        cur = cur.withColumn("syms",
-          expr(s"replace(syms, ' $l  $r ', ' $l$r ')"))
-        if (step % 8 == 0) {
-          val next = cur.localCheckpoint()
-          if (checkpointed != null) checkpointed.unpersist()
-          checkpointed = next
-          cur = next
-        }
-        step += 1
-      }
-    }
-    if (checkpointed != null) checkpointed.unpersist()
-    merges.toSeq
-  }
-
-  /** Merge-BATCHED BPE training: the same merge table as [[bpeTrain]]
-    * — provably, not approximately — in ~batch-size× fewer driver
-    * supersteps. [[bpeTrain]] pays one vocab-bounded aggregate + one
-    * 1-row collect PER MERGE; at tokenizer-realistic vocabularies
-    * (32k merges) that is 32k sequential driver round-trips even
-    * though nothing corpus-sized moves — the repo's one remaining
-    * driver-side depth bound (round-12 verdict lead item). This
-    * variant collects the top-`topM` pairs per superstep and admits a
-    * prefix of mutually-safe merges on the driver.
-    *
-    * Admission rule (ranked by the sequential tie-break cnt DESC,
-    * (l, r) ASC; `threat` starts at the topM-th count — 0 if the list
-    * wasn't truncated):
+    * Admission rule (`threat` starts at the topM-th count when the
+    * list was truncated, else 0):
     *   - rank 1 is ALWAYS admitted: it is the global argmax, exactly
-    *     sequential BPE's next pick;
+    *     classic BPE's next pick;
     *   - on EVERY admission, the counts of ALL collected pairs that
     *     share a symbol with the pick (lhs, rhs, or merged name — the
     *     merged string can collide with a pre-existing symbol) fold
@@ -331,23 +253,25 @@ object Text {
     *     iterated past: a conflicting pair ranked BELOW a candidate
     *     (equal count, later tie-break) still bounds a new pair whose
     *     own (l, r) key could tie-break ABOVE that candidate at its
-    *     sequential turn (observed live on the sf corpora: admitted
+    *     one-at-a-time turn (observed live on the sf corpora: admitted
     *     (lu, m) at 978 while the yet-unexamined (o, lu) at 978
     *     bounded the new (co, lu), which then beat (lu, m) on the
-    *     string order — the first buggy formulation diverged from
-    *     sequential at step 15);
+    *     string order — the first formulation, which folded only the
+    *     rows already passed, diverged at step 15);
     *   - a candidate sharing a symbol with an admitted pick is skipped
     *     (its count is already in `threat`);
     *   - otherwise it is admitted iff its count exceeds `threat`
-    *     STRICTLY, else the superstep's batch closes.
+    *     STRICTLY, else the batch closes;
+    *   - the batch also closes right after a pick whose merged name
+    *     `lhs+rhs` already exists as a symbol (see below).
     *
-    * Why the result is EXACTLY the sequential greedy sequence: applying
-    * an admitted pick (a,b) cannot change the count of any pair that
+    * Why the batch is EXACTLY the greedy sequence: applying an
+    * admitted pick (a,b) cannot change the count of any pair that
     * shares no symbol with it, and cannot create or destroy any OTHER
     * pair's adjacency (merging two adjacent symbols into one preserves
     * every adjacency not involving a or b), so each admitted pick's
-    * recorded count is its true count at its own sequential step. The
-    * pairs whose counts DO change all share a symbol with some
+    * recorded count is its true count at its own one-at-a-time step.
+    * The pairs whose counts DO change all share a symbol with some
     * admitted pick: (i) existing pairs touching a or b only DECREASE
     * from a pre-batch count that is folded into `threat` (collected)
     * or ≤ the topM-th count (truncated tail, `threat`'s floor);
@@ -356,32 +280,23 @@ object Text {
     * back to a pre-batch adjacency ((x, ab) instances were (x, a);
     * (ab, cd) instances were (b, c)) — again ≤ `threat`. A later
     * admitted pick with count > threat therefore still beats every
-    * changed or new pair when its sequential turn comes, and it beats
-    * every unchanged pair by rank order (any unchanged pair ranked
-    * between two admitted picks would itself have been admitted, or
-    * the batch closed there). Strictness matters: a new pair with
-    * count EQUAL to a candidate's can win the (l, r) tie-break, so
-    * equality closes the batch. The batch applies in rank order —
-    * disjointness makes the replaces commute, but rank order keeps
-    * the replay trivially auditable.
+    * changed or new pair when its turn comes, and it beats every
+    * unchanged pair by rank order (any unchanged pair ranked between
+    * two admitted picks would itself have been admitted, or the batch
+    * closed there). Strictness matters: a new pair with count EQUAL to
+    * a candidate's can win the (l, r) tie-break, so equality closes
+    * the batch. The batch applies in rank order — disjointness makes
+    * the replaces commute, but rank order keeps the replay trivially
+    * auditable.
     *
-    * Returns (merges, supersteps). The equivalence to [[bpeTrain]] is
-    * spec-pinned merge-for-merge (including pair_count) on toy,
-    * randomized, and real corpora; exhaustion (empty aggregate before
-    * nMerges) matches because rank 1 is always admitted, so progress
-    * per superstep is ≥ 1 and the stop condition is the same empty
-    * aggregate. */
-  /** Driver-side superstep admission shared by [[bpeTrainBatched]] and
-    * [[bpeTrainDelta]] — the rule documented on [[bpeTrainBatched]],
-    * plus the merged-NAME collision close (round-13 ADVICE): when an
-    * admitted pick's merged name `lhs+rhs` already exists as a symbol
-    * s, the post-batch count of a pair (x, s) is its PRE-existing
-    * count PLUS the occurrences the merge just created from (x, lhs) —
-    * two terms each individually bounded by `threat` whose SUM is not,
-    * so a later same-batch admission with threat < c < that sum could
-    * diverge from sequential BPE. The pick itself is safe (it shares
-    * no symbol with earlier picks, so its recorded count is its true
-    * sequential count); the batch closes immediately after it.
+    * Merged-NAME collision close: when an admitted pick's merged name
+    * already exists as a symbol s, the post-batch count of a pair
+    * (x, s) is its PRE-existing count PLUS the occurrences the merge
+    * just created from (x, lhs) — two terms each individually bounded
+    * by `threat` whose SUM is not, so a later same-batch admission
+    * with threat < c < that sum could diverge. The pick itself is safe
+    * (it shares no symbol with earlier picks, so its recorded count is
+    * its true count); the batch closes immediately after it.
     *
     * `mergedNames` is the cross-superstep registry of every merged
     * name this training run has created. It is COMPLETE as a collision
@@ -392,20 +307,20 @@ object Text {
     * names are registered).
     *
     * Reachability note: a 200k-corpus randomized search (2–3 letter
-    * alphabets, exhaustion depth) found NO corpus where sequential
-    * greedy BPE ever re-creates an existing merged name — the
-    * collision case may be unreachable (a same-split re-merge needs
-    * the pair to re-form, which only a prior collision could cause;
-    * a different-split collision was never observed). The close is
-    * kept anyway: it costs one Set probe per admission and makes the
-    * batching proof unconditional instead of resting on an unproven
-    * no-collision theorem. private[graft] for the direct unit pin. */
+    * alphabets, exhaustion depth) found NO corpus where greedy BPE
+    * ever re-creates an existing merged name — the collision case may
+    * be unreachable (a same-split re-merge needs the pair to re-form,
+    * which only a prior collision could cause; a different-split
+    * collision was never observed). The close is kept anyway: it costs
+    * one Set probe per admission and makes the batching proof
+    * unconditional instead of resting on an unproven no-collision
+    * theorem. private[graft] for the direct unit pin. */
   private[graft] def bpeAdmitBatch(rows: Array[(String, String, Long)],
       truncated: Boolean, limit: Int, stepBase: Int,
-      mergedNames: scala.collection.mutable.Set[String]): Seq[BpeMerge] = {
+      mergedNames: scala.collection.mutable.Set[String]): Seq[api.Bpe.Merge] = {
     var threat = if (truncated) rows(rows.length - 1)._3 else 0L
     val used = scala.collection.mutable.Set.empty[String]
-    val batch = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
+    val batch = scala.collection.mutable.ArrayBuffer.empty[api.Bpe.Merge]
     var i = 0
     var open = true
     while (i < rows.length && open && batch.size < limit) {
@@ -414,7 +329,7 @@ object Text {
         if (batch.isEmpty || c > threat) {
           require(!(l + r).exists(ch => ch == '\'' || ch == '\\' || ch.isWhitespace),
             s"BPE symbol contains a quote/backslash/space: '$l' + '$r'")
-          batch += BpeMerge(stepBase + batch.size + 1, l, r, l + r, c)
+          batch += api.Bpe.Merge(stepBase + batch.size + 1, l, r, l + r, c)
           val syms = Set(l, r, l + r)
           used ++= syms
           // fold in EVERY collected pair conflicting with this pick
@@ -435,86 +350,37 @@ object Text {
     batch.toSeq
   }
 
-  private[graft] def bpeTrainBatched(words: DataFrame, nMerges: Int,
-      maxBatch: Int = 64, topM: Int = 256,
-      onSuperstep: (Int, Int, Double) => Unit = null): (Seq[BpeMerge], Int) = {
-    import words.sparkSession.implicits._
-    require(maxBatch >= 1, s"maxBatch must be >= 1: $maxBatch")
-    require(topM >= maxBatch, s"topM ($topM) must cover maxBatch ($maxBatch)")
-    var cur = words
-    var checkpointed: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    val mergedNames = scala.collection.mutable.Set.empty[String]
-    var supersteps = 0
-    var exhausted = false
-    // lineage control, the bpeTrain cadence scaled to batches: truncate
-    // after ~8 accumulated per-row replaces, not per superstep
-    var replacesSinceCheckpoint = 0
-    while (merges.size < nMerges && !exhausted) {
-      val tSuper = System.nanoTime()
-      val top = cur
-        .select($"freq", bpeSymArray($"syms").as("sy"))
-        .select($"freq", explode(expr(
-          """case when size(sy) >= 2
-            |  then transform(sequence(1, size(sy) - 1),
-            |                 i -> struct(sy[i - 1] as l, sy[i] as r))
-            |  else array(cast(null as struct<l: string, r: string>)) end"""
-            .stripMargin)).as("p"))
-        .filter($"p".isNotNull)
-        .groupBy($"p.l".as("l"), $"p.r".as("r"))
-        .agg(sum($"freq").as("cnt"))
-        .orderBy($"cnt".desc, $"l", $"r")
-        .limit(topM)
-        .collect()
-      supersteps += 1
-      if (top.isEmpty) exhausted = true
-      else {
-        val rows = top.map(t => (t.getString(0), t.getString(1), t.getLong(2)))
-        val batch = bpeAdmitBatch(rows, rows.length == topM,
-          math.min(maxBatch, nMerges - merges.size), merges.size, mergedNames)
-        merges ++= batch
-        cur = batch.foldLeft(cur) { (df, m) =>
-          df.withColumn("syms",
-            expr(s"replace(syms, ' ${m.lhs}  ${m.rhs} ', ' ${m.merged} ')"))
-        }
-        replacesSinceCheckpoint += batch.size
-        if (replacesSinceCheckpoint >= 8) {
-          val next = cur.localCheckpoint()
-          if (checkpointed != null) checkpointed.unpersist()
-          checkpointed = next
-          cur = next
-          replacesSinceCheckpoint = 0
-        }
-        if (onSuperstep != null)
-          onSuperstep(supersteps, batch.size, (System.nanoTime() - tSuper) / 1e9)
-      }
-    }
-    if (checkpointed != null) checkpointed.unpersist()
-    (merges.toSeq, supersteps)
-  }
-
-  /** Delta-MAINTAINED merge-batched BPE training (round-14 lead item)
-    * — the identical merge table as [[bpeTrain]] / [[bpeTrainBatched]]
-    * (the admission rule is [[bpeAdmitBatch]], shared), with the one
-    * remaining corpus-proportional superstep cost removed: instead of
-    * re-exploding and re-aggregating adjacent-pair counts over EVERY
-    * word each superstep, the (l, r, cnt) relation is maintained as a
-    * persisted delta. Applying a batch changes the pair contributions
-    * of exactly the words whose symbol string contains an admitted
-    * pair's match pattern, so the update is
-    *   pc' = pc − pairs(affected, old syms) + pairs(affected, new syms)
-    * — integer counts throughout, so the batched trainer's exactness
-    * proof and the BpeSpec equivalence pins carry over unchanged. Late
-    * supersteps cost O(affected words): the step from "works at 128
-    * merges" to "works at a production 32k-merge vocabulary", where
-    * the long tail of merges touches a vanishing corpus fraction but a
-    * full re-aggregate would still pay the whole corpus every time.
+  /** Distributed BPE training (Sennrich, Haddow & Birch 2016, the
+    * word-frequency formulation of Gage 1994): learns up to `nMerges`
+    * merges, each the adjacent symbol pair with the corpus-maximal
+    * frequency-weighted count under the (cnt DESC, lhs, rhs) tie-break
+    * — integer counts and binary string order, so every decision is
+    * exact and the DuckDB oracle replays them one merge per chained
+    * CTE (the q_sim_mmr pattern). The merge table is classic one-at-a-
+    * time greedy BPE's; BpeSpec pins it merge-for-merge (pair_count
+    * included) against a plain-Scala replay on toy, randomized,
+    * dense-tie and real corpora, to exhaustion depth.
     *
-    * Loop discipline — ONE Spark job AND one exchange per superstep,
-    * same as the batched trainer (measured at the x100 corpus' small
-    * 62k vocab, where fixed costs dominate: an eager-checkpoint
-    * formulation paid 3 jobs/superstep and per-leg groupBys paid 3
-    * exchanges — each read 1.4–1.6× SLOWER than batched): the delta is
+    * Supersteps, not merges, drive the loop: each superstep collects
+    * the top-`topM` pairs and admits up to `maxBatch` merges with
+    * [[bpeAdmitBatch]], which carries the exactness proof. The
+    * (l, r, cnt) pair-count relation is maintained as a persisted
+    * delta rather than re-aggregated: applying a batch changes the
+    * pair contributions of exactly the words whose symbol string
+    * contains an admitted pair's match pattern, so
+    *   pc' = pc − pairs(affected, old syms) + pairs(affected, new syms)
+    * — integer counts throughout. Per-superstep cost: one top-M
+    * collect, which runs the previous superstep's update in the same
+    * job and exchange; the update explodes only the affected words,
+    * O(affected words), behind one narrow filter of the live words.
+    * The long tail of a production 32k-merge vocabulary touches a
+    * vanishing corpus fraction per merge, which a full re-aggregate
+    * would still pay in full every time.
+    *
+    * Loop discipline (measured at the x100 corpus' 62k vocab, where
+    * fixed costs dominate: an eager-checkpoint formulation paid 3
+    * jobs/superstep and per-leg groupBys paid 3 exchanges, each 1.4–
+    * 1.6× SLOWER than a full re-aggregate per superstep): the delta is
     * one narrow scan of cur projecting each affected word's OLD and
     * NEW symbol arrays side by side, exploded as signed raw pair rows
     * and netted by the outer groupBy's map-side partial agg; pcNext is
@@ -522,18 +388,26 @@ object Text {
     * collect — the one driver round-trip carries the whole update.
     * The previous superstep's pinned blocks are released right after
     * that collect; lineage never grows past one superstep. The symbol
-    * strings keep bpeTrain's narrow replace-chain with its every-8
-    * truncation cadence. Exact-zero rows are DROPPED from pc each
-    * superstep: a key that later returns (possible only when a
-    * merged-name collision re-creates a dead pair) is rebuilt by the
-    * union-groupBy from its delta rows alone, so the compaction is
-    * value-neutral while keeping the relation at live-pair size.
+    * strings advance by a narrow replace chain, truncated by
+    * localCheckpoint after every ~8 accumulated replaces. Exact-zero
+    * rows are DROPPED from pc each superstep: a key that later returns
+    * (possible only when a merged-name collision re-creates a dead
+    * pair) is rebuilt by the union-groupBy from its delta rows alone,
+    * so the compaction is value-neutral while keeping the relation at
+    * live-pair size.
     *
-    * Exhaustion matches the sequential trainer: pc empty ⟺ no word
-    * has ≥ 2 symbols ⟺ bpeTrain's aggregate is empty. */
-  private[graft] def bpeTrainDelta(words: DataFrame, nMerges: Int,
-      maxBatch: Int = 64, topM: Int = 256,
-      onSuperstep: (Int, Int, Double) => Unit = null): (Seq[BpeMerge], Int) = {
+    * 100 TB shape: the only corpus-sized stage is the initial word
+    * count in [[bpeWords]] (digest-free: words ARE the aggregation
+    * key, and partial aggregation collapses each task to its distinct
+    * words before the exchange). Training then runs on the |vocab|-row
+    * relation — at web scale ~10^7–10^8 rows, a fraction of one
+    * executor's input split.
+    *
+    * Exhaustion: pc empty ⟺ no word has ≥ 2 symbols ⟺ classic BPE has
+    * no pair left; rank 1 is always admitted, so every superstep but
+    * the last makes progress. Returns (merges, supersteps). */
+  private[graft] def bpeTrain(words: DataFrame, nMerges: Int,
+      maxBatch: Int = 64, topM: Int = 256): (Seq[api.Bpe.Merge], Int) = {
     import words.sparkSession.implicits._
     require(maxBatch >= 1, s"maxBatch must be >= 1: $maxBatch")
     require(topM >= maxBatch, s"topM ($topM) must cover maxBatch ($maxBatch)")
@@ -559,13 +433,12 @@ object Text {
     var pc = pairRows(cur, 1)
       .groupBy($"l", $"r").agg(sum($"cnt").as("cnt")).localCheckpoint()
     var prevPc: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
+    val merges = scala.collection.mutable.ArrayBuffer.empty[api.Bpe.Merge]
     val mergedNames = scala.collection.mutable.Set.empty[String]
     var supersteps = 0
     var exhausted = false
     var replacesSinceCheckpoint = 0
     while (merges.size < nMerges && !exhausted) {
-      val tSuper = System.nanoTime()
       // cnt > 0 is an invariant (exact maintenance + zero compaction);
       // the filter is a free belt-and-braces guard on a bounded
       // relation. This collect is the superstep's ONE job: it also
@@ -581,11 +454,6 @@ object Text {
         val batch = bpeAdmitBatch(rows, rows.length == topM,
           math.min(maxBatch, nMerges - merges.size), merges.size, mergedNames)
         merges ++= batch
-        def applyBatch(df: DataFrame): DataFrame =
-          batch.foldLeft(df) { (d, m) =>
-            d.withColumn("syms",
-              expr(s"replace(syms, ' ${m.lhs}  ${m.rhs} ', ' ${m.merged} ')"))
-          }
         // the delta: ONE narrow scan of cur — the affected filter, then
         // a single projection carrying the word's OLD symbol array and
         // its NEW one (batch applied), exploded together as signed pair
@@ -611,7 +479,7 @@ object Text {
           .localCheckpoint(false) // lazy: the next top-M collect runs it
         prevPc = pc
         pc = pcNext
-        cur = applyBatch(cur)
+        cur = bpeApply(cur, batch)
         replacesSinceCheckpoint += batch.size
         if (replacesSinceCheckpoint >= 8) {
           // EXHAUSTED-WORD PRUNE (round-15 verdict item 4): a word
@@ -630,8 +498,6 @@ object Text {
           cur = next
           replacesSinceCheckpoint = 0
         }
-        if (onSuperstep != null)
-          onSuperstep(supersteps, batch.size, (System.nanoTime() - tSuper) / 1e9)
       }
     }
     if (curCheckpointed != null) curCheckpointed.unpersist()
@@ -648,7 +514,7 @@ object Text {
     * api.Bpe.segmentation, where an un-guarded splice into the SQL
     * literal would be an injection (or a silent representation
     * corruption for space-bearing symbols), not just a crash. */
-  private[graft] def bpeApply(words: DataFrame, merges: Seq[BpeMerge]): DataFrame =
+  private[graft] def bpeApply(words: DataFrame, merges: Seq[api.Bpe.Merge]): DataFrame =
     merges.foldLeft(words) { (df, m) =>
       require(!(m.lhs + m.rhs + m.merged).exists(
           c => c == '\'' || c == '\\' || c.isWhitespace),
@@ -668,14 +534,11 @@ object Text {
   private def corpusKey(tag: String, docs: DataFrame): String =
     s"$tag:${api.ResultCache.sessionId(docs.sparkSession)}:${api.ResultCache.planKey(docs)}"
 
-  private def bpeMergesFor(spark: SparkSession, dir: String): Seq[BpeMerge] = {
+  private def bpeMergesFor(spark: SparkSession, dir: String): Seq[api.Bpe.Merge] = {
     val docs = Tables.documents(spark, dir)
-    api.ResultCache.getOrCompute[Seq[BpeMerge]](
+    api.ResultCache.getOrCompute[Seq[api.Bpe.Merge]](
       corpusKey(s"bpe$BpeMergeCount", docs), _ => true)(
-      // the delta trainer's merge table is spec-pinned EQUAL to the
-      // sequential one, so the graded queries and their oracle replay
-      // are unchanged — only the per-superstep cost drops
-      bpeTrainDelta(bpeWords(docs), BpeMergeCount)._1)
+      bpeTrain(bpeWords(docs), BpeMergeCount)._1)
   }
 
   /** The trained (word → subtoken count) relation both consuming

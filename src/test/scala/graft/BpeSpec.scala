@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * The BPE pins are the verdict-12 "done" criterion: the distributed
   * trainer's merge sequence must equal an INDEPENDENT driver-side
   * replay of classic BPE (pair-count → argmax with the (cnt DESC,
-  * lhs, rhs) tie-break → greedy left-to-right merge) on a toy corpus —
+  * lhs, rhs) tie-break → greedy left-to-right merge) on toy,
+  * randomized, dense-tie and real corpora, to exhaustion depth —
   * plus direct pins of the double-space `replace` trick against greedy
   * merging on the adversarial adjacency shapes ([a,b,a,b], [a,a,a]). */
 class BpeSpec extends SparkSpec {
@@ -53,6 +54,12 @@ class BpeSpec extends SparkSpec {
     Text.bpeWords(docs.toDF("doc_id", "text"))
   }
 
+  private def freqOf(docs: Seq[(Long, String)]): Map[String, Long] =
+    docs.flatMap(_._2.split(" ")).groupBy(identity).map { case (w, g) => w -> g.size.toLong }
+
+  private def triples(merges: Seq[api.Bpe.Merge]): Seq[(String, String, Long)] =
+    merges.map(m => (m.lhs, m.rhs, m.pair_count))
+
   test("double-space replace trick IS greedy left-to-right merging on adversarial shapes") {
     import spark.implicits._
     // [a,b,a,b] -> [ab,ab] (adjacent matches share the separator's
@@ -74,22 +81,24 @@ class BpeSpec extends SparkSpec {
       (0L, "lower lower lowest newer newer newer new"),
       (1L, "wider wide new newer lowest"),
       (2L, "low low lower wide wide wide"))
-    val freq: Map[String, Long] = docs.flatMap(_._2.split(" ")).groupBy(identity)
-      .map { case (w, g) => w -> g.size.toLong }
-    val expected = replayBpe(freq, 10)
-    val got = Text.bpeTrain(wordsDf(docs), 10)
-      .map(m => (m.lhs, m.rhs, m.pair_count))
-    assert(got == expected, s"\ngot:      $got\nexpected: $expected")
+    val expected = replayBpe(freqOf(docs), 10)
+    val (got, steps) = Text.bpeTrain(wordsDf(docs), 10)
+    assert(triples(got) == expected, s"\ngot:      ${triples(got)}\nexpected: $expected")
     // and the merge steps/merged strings are consistent
-    val full = Text.bpeTrain(wordsDf(docs), 10)
-    assert(full.map(_.step) == (1 to 10))
-    assert(full.forall(m => m.merged == m.lhs + m.rhs))
+    assert(got.map(_.step) == (1 to 10))
+    assert(got.forall(m => m.merged == m.lhs + m.rhs))
+    assert(steps <= got.size)
   }
 
   test("bpeTrain matches the driver replay on randomized corpora (fixed seeds)") {
-    // property-style sweep: 5 seeded corpora over a small alphabet (high
-    // pair-collision rate -> tie-breaks actually exercised), 6 merges each
-    for (seed <- 1 to 5) {
+    // 5 seeded corpora over a small alphabet (high pair-collision rate
+    // -> tie-breaks actually exercised) × deliberately hostile knobs:
+    // topM at its floor (heavy truncation -> the tail threat floor is
+    // live), one-merge and wide supersteps. Each runs to EXHAUSTION
+    // depth: a batching or delta-maintenance bug can be invisible for
+    // 14 steps and bite at 15, so equivalence pins must run the corpus
+    // dry.
+    for (seed <- 1 to 5; (mb, tm) <- Seq((1, 4), (4, 4), (8, 32))) {
       val rnd = new scala.util.Random(seed * 7919)
       val alphabet = "abcd"
       val docs = (0L until 3L).map { d =>
@@ -97,24 +106,28 @@ class BpeSpec extends SparkSpec {
           Seq.fill(1 + rnd.nextInt(6))(alphabet(rnd.nextInt(alphabet.length))).mkString
         ).mkString(" ")
       }
-      val freq: Map[String, Long] = docs.flatMap(_._2.split(" ")).groupBy(identity)
-        .map { case (w, g) => w -> g.size.toLong }
-      val expected = replayBpe(freq, 6)
-      val got = Text.bpeTrain(wordsDf(docs), 6).map(m => (m.lhs, m.rhs, m.pair_count))
-      assert(got == expected, s"seed=$seed corpus=$docs\ngot:      $got\nexpected: $expected")
+      val expected = replayBpe(freqOf(docs), 40)
+      val (got, steps) = Text.bpeTrain(wordsDf(docs), 40, maxBatch = mb, topM = tm)
+      assert(triples(got) == expected,
+        s"seed=$seed maxBatch=$mb topM=$tm corpus=$docs\ngot: ${triples(got)}\nexpected: $expected")
+      // maxBatch=1 degenerates to one merge per superstep
+      // (+1 = the empty closing superstep at exhaustion)
+      if (mb == 1)
+        assert(steps == got.size || steps == got.size + 1, s"seed=$seed: $steps supersteps")
     }
   }
 
   test("bpeTrain degrades gracefully when the corpus exhausts before nMerges") {
-    // all single-char words -> zero adjacent pairs -> zero merges, no
-    // error (the oracle side truncates identically: an empty argmax CTE
-    // leaves the symbol strings UNCHANGED via the CASE guard — so the
-    // merge table AND the downstream count/packing oracles all mirror
-    // Spark's early loop exit)
-    assert(Text.bpeTrain(wordsDf(Seq((0L, "a b c a b"))), 5).isEmpty)
+    // all single-char words -> zero adjacent pairs -> zero merges after
+    // one superstep, no error (the oracle side truncates identically: an
+    // empty argmax CTE leaves the symbol strings UNCHANGED via the CASE
+    // guard — so the merge table AND the downstream count/packing oracles
+    // all mirror Spark's early loop exit)
+    val (m0, s0) = Text.bpeTrain(wordsDf(Seq((0L, "a b c a b"))), 5)
+    assert(m0.isEmpty && s0 == 1)
     // two-char words exhaust after exactly one merge per distinct pair
-    val m = Text.bpeTrain(wordsDf(Seq((0L, "ab ab cd"))), 5)
-    assert(m.map(x => (x.lhs, x.rhs)) == Seq(("a", "b"), ("c", "d")))
+    val (m2, _) = Text.bpeTrain(wordsDf(Seq((0L, "ab ab cd"))), 5)
+    assert(m2.map(x => (x.lhs, x.rhs)) == Seq(("a", "b"), ("c", "d")))
   }
 
   test("bpeTrain is deterministic across invocations (fresh plans, no memo)") {
@@ -124,103 +137,18 @@ class BpeSpec extends SparkSpec {
     assert(a == b)
   }
 
-  // ---- merge-batched trainer: exact equivalence to the sequential one ----
-
-  test("bpeTrainBatched: the naive-batching counterexample closes the batch and stays sequential-exact") {
-    // counts: (a,b)=100 tied with (x,a)=100, (c,d)=60. Sequential: pick
+  test("bpeTrain: the naive-batching counterexample closes the batch and stays exact") {
+    // counts: (a,b)=100 tied with (x,a)=100, (c,d)=60. Classic BPE: pick
     // (a,b) (tie-break), then the NEW pair (x,ab) has count 100 and
     // beats (c,d) — a batcher that admitted (c,d) alongside (a,b) would
     // diverge here. The admission rule folds (x,a)=100 into the threat,
     // so (c,d)=60 fails 60 > 100 and the superstep closes after one
     // merge — exactness over batch size.
     val docs = Seq((0L, (("xab " * 100) + ("cd " * 60)).trim))
-    val freq: Map[String, Long] = docs.flatMap(_._2.split(" ")).groupBy(identity)
-      .map { case (w, g) => w -> g.size.toLong }
-    val expected = replayBpe(freq, 4)
-    val (got, steps) = Text.bpeTrainBatched(wordsDf(docs), 4, maxBatch = 8, topM = 16)
-    assert(got.map(m => (m.lhs, m.rhs, m.pair_count)) == expected,
-      s"\ngot:      $got\nexpected: $expected")
+    val expected = replayBpe(freqOf(docs), 4)
+    val (got, steps) = Text.bpeTrain(wordsDf(docs), 4, maxBatch = 8, topM = 16)
+    assert(triples(got) == expected, s"\ngot:      $got\nexpected: $expected")
     assert(steps >= 2, s"the counterexample cannot batch its first two merges: $steps")
-  }
-
-  test("bpeTrainBatched equals bpeTrain merge-for-merge on toy and randomized corpora") {
-    val toy = Seq(
-      (0L, "lower lower lowest newer newer newer new"),
-      (1L, "wider wide new newer lowest"),
-      (2L, "low low lower wide wide wide"))
-    val toyWords = wordsDf(toy)
-    val seqMerges = Text.bpeTrain(toyWords, 10)
-    val (batched, steps) = Text.bpeTrainBatched(toyWords, 10)
-    assert(batched == seqMerges)
-    assert(steps <= seqMerges.size)
-    // randomized sweep, deliberately hostile knobs: topM at its floor
-    // (heavy truncation -> the tail threat floor is live) and a small
-    // alphabet (dense symbol sharing -> conflicts are the common case)
-    for (seed <- 1 to 5; (mb, tm) <- Seq((1, 4), (4, 4), (8, 32))) {
-      val rnd = new scala.util.Random(seed * 7919)
-      val alphabet = "abcd"
-      val docs = (0L until 3L).map { d =>
-        d -> Seq.fill(8 + rnd.nextInt(8))(
-          Seq.fill(1 + rnd.nextInt(6))(alphabet(rnd.nextInt(alphabet.length))).mkString
-        ).mkString(" ")
-      }
-      val words = wordsDf(docs)
-      val expected = Text.bpeTrain(words, 8)
-      val (got, _) = Text.bpeTrainBatched(words, 8, maxBatch = mb, topM = tm)
-      assert(got == expected,
-        s"seed=$seed maxBatch=$mb topM=$tm corpus=$docs\ngot: $got\nexpected: $expected")
-    }
-    // and to EXHAUSTION depth per seed vs the driver replay (the spark-
-    // sequential twin is too slow to run 40 deep × 5 seeds; the replay
-    // is the same ground truth the 8-merge pins above validate it against)
-    for (seed <- 1 to 5) {
-      val rnd = new scala.util.Random(seed * 7919)
-      val alphabet = "abcd"
-      val docs = (0L until 3L).map { d =>
-        d -> Seq.fill(8 + rnd.nextInt(8))(
-          Seq.fill(1 + rnd.nextInt(6))(alphabet(rnd.nextInt(alphabet.length))).mkString
-        ).mkString(" ")
-      }
-      val freq: Map[String, Long] = docs.flatMap(_._2.split(" ")).groupBy(identity)
-        .map { case (w, g) => w -> g.size.toLong }
-      val expected = replayBpe(freq, 40)
-      val (got, _) = Text.bpeTrainBatched(wordsDf(docs), 40, maxBatch = 8, topM = 32)
-      assert(got.map(m => (m.lhs, m.rhs, m.pair_count)) == expected,
-        s"depth seed=$seed corpus=$docs")
-    }
-  }
-
-  test("bpeTrainDelta equals bpeTrain merge-for-merge on toy and randomized corpora, to exhaustion depth") {
-    val toy = Seq(
-      (0L, "lower lower lowest newer newer newer new"),
-      (1L, "wider wide new newer lowest"),
-      (2L, "low low lower wide wide wide"))
-    val toyWords = wordsDf(toy)
-    assert(Text.bpeTrainDelta(toyWords, 10)._1 == Text.bpeTrain(toyWords, 10))
-    // randomized, hostile knobs (topM at its floor, small alphabet) at
-    // EXHAUSTION depth vs the driver replay — the round-13 lesson: a
-    // batching/maintenance bug can be invisible for 14 steps and bite
-    // at 15, so equivalence pins must run the corpus dry
-    for (seed <- 1 to 5; (mb, tm) <- Seq((1, 4), (8, 32))) {
-      val rnd = new scala.util.Random(seed * 7919)
-      val alphabet = "abcd"
-      val docs = (0L until 3L).map { d =>
-        d -> Seq.fill(8 + rnd.nextInt(8))(
-          Seq.fill(1 + rnd.nextInt(6))(alphabet(rnd.nextInt(alphabet.length))).mkString
-        ).mkString(" ")
-      }
-      val freq: Map[String, Long] = docs.flatMap(_._2.split(" ")).groupBy(identity)
-        .map { case (w, g) => w -> g.size.toLong }
-      val expected = replayBpe(freq, 40)
-      val (got, _) = Text.bpeTrainDelta(wordsDf(docs), 40, maxBatch = mb, topM = tm)
-      assert(got.map(m => (m.lhs, m.rhs, m.pair_count)) == expected,
-        s"seed=$seed maxBatch=$mb topM=$tm corpus=$docs\ngot: ${got.map(m => (m.lhs, m.rhs, m.pair_count))}\nexpected: $expected")
-    }
-    // exhaustion bookkeeping matches the batched trainer's contract
-    val (m0, s0) = Text.bpeTrainDelta(wordsDf(Seq((0L, "a b c a b"))), 5)
-    assert(m0.isEmpty && s0 == 1)
-    val (m2, _) = Text.bpeTrainDelta(wordsDf(Seq((0L, "ab ab cd"))), 5)
-    assert(m2.map(x => (x.lhs, x.rhs)) == Seq(("a", "b"), ("c", "d")))
   }
 
   test("bpeAdmitBatch: a pick whose merged name already exists as a symbol CLOSES the batch") {
@@ -252,14 +180,12 @@ class BpeSpec extends SparkSpec {
     assert(one.map(m => (m.lhs, m.rhs)) == Seq(("a", "b")), s"got $one")
   }
 
-  test("dense-tie unary/binary corpora at exhaustion depth: batched and delta stay sequential-exact") {
+  test("dense-tie unary/binary corpora at exhaustion depth: bpeTrain stays sequential-exact") {
     // the hostile-alignment family: every symbol is a power of one or
     // two letters, so equal counts and shared-symbol conflicts are the
     // common case and greedy left-to-right alignment effects (the
     // [a,a,a] -> [aa,a] asymmetry) are maximal. Ground truth = the
-    // O(n²) driver replay, run to exhaustion (the round-13 lesson: a
-    // batching/maintenance bug can be invisible for 14 steps and bite
-    // at 15).
+    // O(n²) plain-Scala replay, run to exhaustion.
     for (seed <- 1 to 3; alphabet <- Seq("a", "ab")) {
       val rnd = new scala.util.Random(seed * 31337 + alphabet.length)
       val docs = (0L until 4L).map { d =>
@@ -267,73 +193,45 @@ class BpeSpec extends SparkSpec {
           Seq.fill(1 + rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
         ).mkString(" ")
       }
-      val freq: Map[String, Long] = docs.flatMap(_._2.split(" ")).groupBy(identity)
-        .map { case (w, g) => w -> g.size.toLong }
-      val expected = replayBpe(freq, 200)
-      val words = wordsDf(docs)
-      val (gotB, _) = Text.bpeTrainBatched(words, 200, maxBatch = 8, topM = 32)
-      assert(gotB.map(m => (m.lhs, m.rhs, m.pair_count)) == expected,
-        s"batched seed=$seed alphabet=$alphabet corpus=$docs\nfirst diff: ${gotB.map(m => (m.lhs, m.rhs, m.pair_count)).zip(expected).zipWithIndex.find(p => p._1._1 != p._1._2)}")
-      val (gotD, _) = Text.bpeTrainDelta(words, 200, maxBatch = 8, topM = 32)
-      assert(gotD.map(m => (m.lhs, m.rhs, m.pair_count)) == expected,
-        s"delta seed=$seed alphabet=$alphabet corpus=$docs\nfirst diff: ${gotD.map(m => (m.lhs, m.rhs, m.pair_count)).zip(expected).zipWithIndex.find(p => p._1._1 != p._1._2)}")
+      val expected = replayBpe(freqOf(docs), 200)
+      val (got, _) = Text.bpeTrain(wordsDf(docs), 200, maxBatch = 8, topM = 32)
+      assert(triples(got) == expected,
+        s"seed=$seed alphabet=$alphabet corpus=$docs\nfirst diff: ${triples(got).zip(expected).zipWithIndex.find(p => p._1._1 != p._1._2)}")
     }
   }
 
-  test("bpeTrainBatched: maxBatch=1 degenerates to one merge per superstep; exhaustion matches") {
-    val words = wordsDf(Seq((0L, "aa ab aa ba ab aa"), (1L, "ba ba ab")))
-    val (m1, s1) = Text.bpeTrainBatched(words, 6, maxBatch = 1)
-    assert(m1 == Text.bpeTrain(words, 6))
-    assert(s1 == m1.size || s1 == m1.size + 1) // +1 = the empty closing aggregate
-    // exhaustion: single-char words -> no pairs -> empty, one superstep
-    val (m0, s0) = Text.bpeTrainBatched(wordsDf(Seq((0L, "a b c a b"))), 5)
-    assert(m0.isEmpty && s0 == 1)
-    val (m2, _) = Text.bpeTrainBatched(wordsDf(Seq((0L, "ab ab cd"))), 5)
-    assert(m2.map(x => (x.lhs, x.rhs)) == Seq(("a", "b"), ("c", "d")))
-  }
-
-  test("bpeTrainBatched on the real sf0.001 corpus: identical merges, fewer supersteps") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val words = Text.bpeWords(docs)
-    val expected = Text.bpeTrain(words, Text.BpeMergeCount)
-    val (got, steps) = Text.bpeTrainBatched(words, Text.BpeMergeCount)
-    assert(got == expected)
-    assert(steps < Text.BpeMergeCount,
-      s"real corpus must batch at least once: $steps supersteps for ${got.size} merges")
-  }
-
-  test("bpeTrainBatched at EXHAUSTION depth on the real corpus equals the driver replay") {
+  test("bpeTrain at EXHAUSTION depth on the real corpus equals the plain-Scala replay") {
     import spark.implicits._
     // the depth regression class: the first batched formulation was
     // correct to step 14 and diverged at 15 (a conflicting pair ranked
     // BELOW an equal-count candidate bounded a new pair that tie-broke
     // above it — found at 128-merge depth, BASELINE.md; the admission
-    // scan now folds the whole collected list). Ground truth at depth is the O(n²)
-    // driver replay over the collected word frequencies — independent
-    // of both DataFrame formulations and cheap at this vocab size.
+    // scan now folds the whole collected list). Ground truth at depth
+    // is the O(n²) plain-Scala replay over the collected word
+    // frequencies — independent of the DataFrame formulation and cheap
+    // at this vocab size.
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val words = Text.bpeWords(docs)
     val freq: Map[String, Long] = words.select($"w", $"freq")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val expected = replayBpe(freq, 128)
-    val (got, steps) = Text.bpeTrainBatched(words, 128)
-    assert(got.map(m => (m.lhs, m.rhs, m.pair_count)) == expected,
-      s"first diff: ${got.map(m => (m.lhs, m.rhs, m.pair_count)).zip(expected).find(p => p._1 != p._2)}")
+    val (got, steps) = Text.bpeTrain(words, 128)
+    assert(triples(got) == expected,
+      s"first diff: ${triples(got).zip(expected).find(p => p._1 != p._2)}")
     assert(got.size > Text.BpeMergeCount, "exhaustion depth must exceed the graded merge count")
     assert(steps < got.size, s"depth run must batch: $steps supersteps for ${got.size} merges")
-    // and the DELTA trainer — the graded/api path since round 14 —
-    // agrees at the same depth on the same real corpus
-    val (gotD, stepsD) = Text.bpeTrainDelta(words, 128)
-    assert(gotD.map(m => (m.lhs, m.rhs, m.pair_count)) == expected,
-      s"delta first diff: ${gotD.map(m => (m.lhs, m.rhs, m.pair_count)).zip(expected).find(p => p._1 != p._2)}")
-    assert(stepsD < gotD.size, s"delta depth run must batch: $stepsD supersteps for ${gotD.size} merges")
+    // the graded depth batches too
+    val (graded, gradedSteps) = Text.bpeTrain(words, Text.BpeMergeCount)
+    assert(triples(graded) == expected.take(Text.BpeMergeCount))
+    assert(gradedSteps < Text.BpeMergeCount,
+      s"real corpus must batch at least once: $gradedSteps supersteps for ${graded.size} merges")
   }
 
   test("bpeApply segmentation: every word re-tokenizes to the replay's symbol sequence") {
     import spark.implicits._
     val docs = Seq((0L, "lower lower lowest newer newer newer new wider wide"))
     val words = wordsDf(docs)
-    val merges = Text.bpeTrain(words, 8)
+    val (merges, _) = Text.bpeTrain(words, 8)
     // driver replay of the final segmentation
     var seg: Map[String, List[String]] = docs.flatMap(_._2.split(" ")).distinct
       .map(w => w -> w.toList.map(_.toString)).toMap

@@ -381,34 +381,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("triangle count is orientation-invariant and matches a driver-side count") {
-    import spark.implicits._
-    val gGen = for {
-      n <- Gen.chooseNum(3, 14)
-      m <- Gen.chooseNum(2, 40)
-      es <- Gen.listOfN(m, for {
-        a <- Gen.chooseNum(0, n - 1); b <- Gen.chooseNum(0, n - 1)
-      } yield (a.toLong, b.toLong))
-    } yield es
-    forAll(gGen) { es =>
-      val df = es.toDF("a", "b")
-      val byId = graft.ops.Graph.countTriangles(df, byDegree = false)
-      val byDeg = graft.ops.Graph.countTriangles(df, byDegree = true)
-      // driver reference: count distinct node triples with all 3 edges
-      val undirected = es.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-        .filter(p => p._1 != p._2).toSet
-      val nodes = undirected.flatMap(p => Seq(p._1, p._2)).toSeq.sorted
-      var ref = 0L
-      for {
-        i <- nodes.indices; j <- (i + 1) until nodes.size; k <- (j + 1) until nodes.size
-        if undirected((nodes(i), nodes(j))) && undirected((nodes(j), nodes(k))) &&
-          undirected((nodes(i), nodes(k)))
-      } ref += 1
-      assert(byId == ref && byDeg == ref,
-        s"byId=$byId byDeg=$byDeg ref=$ref edges=$es")
-    }
-  }
-
   test("triangleCount's three counts equal a driver-side count on random baskets") {
     import spark.implicits._
     // orders of 1-6 lines over up to 12 parts; repeated lines, non-%10
@@ -512,48 +484,6 @@ class PropertySpec extends SparkSpec {
         r = ns.map(n => n -> (150000L + 85L * contrib.getOrElse(n, 0L) / 100L)).toMap
       }
       assert(got == r, s"edges=$es")
-    }
-  }
-
-  test("pageRankConverged reaches the integer fixpoint on random graphs and agrees with long fixed runs") {
-    import spark.implicits._
-    // deterministic LCG random graphs (three shapes), no Gen shrinkage
-    // needed — the property is convergence, not arithmetic (that is the
-    // fixed-iteration replay test above)
-    def lcgEdges(seed: Long, n: Int, m: Int): Seq[(Long, Long)] = {
-      var x = seed
-      def next(): Long = { x = (x * 6364136223846793005L + 1442695040888963407L); (x >>> 33) }
-      (1 to m).map(_ => (next() % n, next() % n)).filter(p => p._1 != p._2).distinct
-    }
-    for ((seed, n, m) <- Seq((1L, 30, 120), (7L, 100, 400), (42L, 12, 20))) {
-      val e = lcgEdges(seed, n, m).toDF("src", "dst")
-      // eps = 0: run to the EXACT integer fixpoint (truncation quantizes
-      // the geometric tail, so delta reaches literal 0) — epsMicro = 1
-      // means "stop when nothing moved"
-      val (ranks, iters) = graft.ops.Graph.pageRankConverged(e, epsMicro = 1L, maxSupersteps = 200)
-      assert(iters < 200, s"seed=$seed: no fixpoint within 200 supersteps")
-      // the fixpoint is genuinely stationary: one more superstep is a no-op
-      val deg = e.groupBy($"src").agg(count(lit(1)).as("deg"))
-      val nodes = e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct()
-      val again = graft.ops.Graph.pageRankIterate(e, deg, nodes, ranks)
-        .withColumnRenamed("pr", "pr2")
-        .join(ranks, "node").filter($"pr2" =!= $"pr").count()
-      assert(again == 0L, s"seed=$seed: fixpoint not stationary")
-      // and a generous fixed-iteration run lands on the same ranks.
-      // Truncate lineage every few supersteps: without it this loop
-      // builds an O(iters)-deep plan whose task serialization recursion
-      // sits at the edge of the default thread stack (observed
-      // StackOverflowError in ObjectOutputStream on the seed-7 graph,
-      // round-10 verdict finding 1). The library's own converged loop
-      // localCheckpoints every round; the replay must too.
-      var fixed = nodes.withColumn("pr", lit(1000000L))
-      for (i <- 1 to iters) {
-        fixed = graft.ops.Graph.pageRankIterate(e, deg, nodes, fixed)
-        if (i % 8 == 0) fixed = fixed.localCheckpoint()
-      }
-      val diff = fixed.withColumnRenamed("pr", "prf").join(ranks, "node")
-        .filter($"prf" =!= $"pr").count()
-      assert(diff == 0L, s"seed=$seed: converged ranks != fixed-$iters ranks")
     }
   }
 
