@@ -898,7 +898,7 @@ object Oracle {
         |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // the Spark side reads a once-per-JVM JSONL copy of part; the
+    // the Spark side reads a derived JSONL copy of part; the
     // oracle reads the parquet ORIGINAL — same format-independence
     // contract as q_scan_csv, over the splittable JSON layout
     "q_scan_jsonl" ->
@@ -907,7 +907,7 @@ object Oracle {
         |       CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
         |FROM part GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // the Spark side reads a once-per-JVM CSV copy of customer; the
+    // the Spark side reads a derived CSV copy of customer; the
     // oracle reads the parquet ORIGINAL, so a match proves the text
     // round-trip was value-exact for every aggregated column
     "q_scan_csv" ->

@@ -35,7 +35,15 @@ import org.apache.spark.storage.StorageLevel
   *     Every caller builds its key from an operator tag, the session
   *     id, every parameter that affects the output, and [[planKey]]
   *     of its input — no other input identity (paths, caller-chosen
-  *     strings, content scans) is used anywhere.
+  *     strings, content scans) is used anywhere. The exception is on
+  *     purpose: entries whose artifact lives on disk or in the shared
+  *     catalog — the derived copies of `ops.Relational`, the bucketed
+  *     tables of `sources.Bucketed`, the events ts sniff of `Tables` —
+  *     omit the session id, because any session of the JVM may reuse
+  *     the artifact; they add the artifact's path or table name, so a
+  *     moved copy root or a renamed table misses.
+  *   - This memo is the only state the library keeps across calls: no
+  *     other object-level map or set (MemoKeySpec pins it).
   *   - Refresh: [[planKey]] covers the input's file listing, so a
   *     fresh read of rewritten files misses every memo. After a data
   *     refresh `spark.catalog.clearCache()` is still required — for
@@ -150,7 +158,12 @@ object ResultCache {
     * sink does: writers create new files). Leaves with neither a cache
     * nor a file index key by their own canonical form: local relations
     * and ranges by their data or parameters, RDD-backed leaves
-    * (localCheckpoint) by RDD identity. */
+    * (localCheckpoint) by RDD identity.
+    *
+    * The key is per-JVM: the semantic-hash field includes identity
+    * hashes (ParquetFileFormat's `hashCode` is its class's identity
+    * hash), so two processes reading the same files get different keys.
+    * Key memos with it; never name files or tables with it. */
   def planKey(df: DataFrame): String = keyOf(df.queryExecution.analyzed)
 
   private def keyOf(plan: LogicalPlan): String = {

@@ -19,7 +19,6 @@ object Udafs {
   private implicit val doubleArrayEnc: Encoder[Array[Double]] = ExpressionEncoder()
   private implicit val floatSeqEnc: Encoder[Seq[Float]] = ExpressionEncoder()
   private implicit val longSeqEnc: Encoder[Seq[Long]] = ExpressionEncoder()
-  private implicit val intSeqEnc: Encoder[Seq[Int]] = ExpressionEncoder()
 
   /** Element-wise min over Array[Long] — the MinHash signature combiner. */
   object ArrayMinAgg extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
@@ -30,22 +29,6 @@ object Udafs {
     def merge(a: Array[Long], b: Array[Long]): Array[Long] =
       if (a.isEmpty) b else if (b.isEmpty) a
       else { var i = 0; while (i < a.length) { if (b(i) < a(i)) a(i) = b(i); i += 1 }; a }
-    def finish(buf: Array[Long]): Seq[Long] = buf.toSeq
-    def bufferEncoder: Encoder[Array[Long]] = longArrayEnc
-    def outputEncoder: Encoder[Seq[Long]] = longSeqEnc
-  }
-
-  /** Element-wise sum of Int arrays into Long — the SimHash bit-vote
-    * combiner. */
-  object ArraySumAgg extends Aggregator[Seq[Int], Array[Long], Seq[Long]] {
-    def zero: Array[Long] = Array.empty
-    def reduce(buf: Array[Long], in: Seq[Int]): Array[Long] = {
-      val b = if (buf.isEmpty) new Array[Long](in.length) else buf
-      var i = 0; while (i < b.length) { b(i) += in(i); i += 1 }; b
-    }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] =
-      if (a.isEmpty) b else if (b.isEmpty) a
-      else { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
     def finish(buf: Array[Long]): Seq[Long] = buf.toSeq
     def bufferEncoder: Encoder[Array[Long]] = longArrayEnc
     def outputEncoder: Encoder[Seq[Long]] = longSeqEnc
@@ -68,10 +51,8 @@ object Udafs {
   }
 
   val arrayMin: org.apache.spark.sql.expressions.UserDefinedFunction = udaf(ArrayMinAgg)
-  val arraySum: org.apache.spark.sql.expressions.UserDefinedFunction = udaf(ArraySumAgg)
   val vecSum: org.apache.spark.sql.expressions.UserDefinedFunction = udaf(VecSumAgg)
 
   def arrayMinCol(c: Column): Column = arrayMin(c)
-  def arraySumCol(c: Column): Column = arraySum(c)
   def vecSumCol(c: Column): Column = vecSum(c)
 }

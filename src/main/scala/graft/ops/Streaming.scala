@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Schemas
 import graft.Schemas.Event
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,27 +57,11 @@ object Streaming {
   // streaming wiring
   // ---------------------------------------------------------------------------
 
-  /** File-based streaming source over an events directory (the parquet
-    * analogue of a Kafka feed; new files = new micro-batches). */
-  def parquetSource(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.readStream
-      .schema(Schemas.eventsRaw)
-      .parquet(dir)
-      .withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-  }
-
   /** Watermarked tumbling aggregation — append-mode-compatible: a window
     * emits once its end passes the watermark; late rows past the
     * watermark are dropped (bounded state). */
   def streamTumbling(events: DataFrame): DataFrame =
     tumblingCounts(events.withWatermark("ts", watermarkDelay))
-
-  def streamSliding(events: DataFrame): DataFrame =
-    slidingCounts(events.withWatermark("ts", watermarkDelay))
-
-  def streamSessions(events: DataFrame): DataFrame =
-    sessionCounts(events.withWatermark("ts", watermarkDelay))
 
   /** Stream-stream inner join (click → view attribution within 1 hour):
     * the canonical two-feed correlation. Both sides carry a watermark

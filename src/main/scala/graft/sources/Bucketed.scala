@@ -22,8 +22,6 @@ import org.apache.spark.sql.functions.col
   */
 object Bucketed {
 
-  private val created = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Table name encodes the bucket count AND an md5 of the RAW dir
     * string: the readable sanitized dir is non-injective ("/sf0.1" and
     * "/sf0_1" collide) and a memo hit on a colliding name — or on the
@@ -52,20 +50,28 @@ object Bucketed {
     if (loc.exists()) deleteTree(loc)
   }
 
+  /** Write `df` as bucketed table `name` once per source version: one
+    * [[graft.api.ResultCache]] entry keyed by the name and
+    * `planKey(df)`, so an in-place refresh of the source misses and
+    * rewrites the table. The entry stays valid while the table exists
+    * in the catalog. Synchronized: the write is a DROP + CREATE of a
+    * shared catalog table, which racing callers must not interleave. */
   private def ensure(spark: SparkSession, name: String, df: DataFrame,
       buckets: Int, key: String): Unit = synchronized {
-    if (!created.contains(name) || !spark.catalog.tableExists(name)) {
+    graft.api.ResultCache.getOrCompute[String](
+      s"bucketed|$name|${graft.api.ResultCache.planKey(df)}",
+      spark.catalog.tableExists(_)) {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       dropStaleLocation(spark, name)
       df.repartition(buckets, col(key))
         .write.bucketBy(buckets, key).sortBy(key)
         .mode("overwrite").saveAsTable(name)
-      created.add(name); ()
-    }
+      name
+    }; ()
   }
 
   /** Bucketed (orders, lineitem) copies co-partitioned on the order
-    * key — written once per JVM per source dir, then read back as
+    * key — written once per source version, then read back as
     * catalog tables whose scans carry the bucket partitioning. */
   def ordersLineitem(spark: SparkSession, dir: String,
       buckets: Int = 8): (DataFrame, DataFrame) = {

@@ -57,7 +57,4 @@ object Formats {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
-
-  def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
 }

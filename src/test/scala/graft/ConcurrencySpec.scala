@@ -2,10 +2,12 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
-/** Concurrent-caller robustness for the operators that memoize
-  * filesystem state per JVM (the partitioned-copy cache behind
-  * q_scan_partition, the bucketed-table write behind q_join_bucketed).
-  * Both publish via write-to-temp + atomic rename (or a synchronized
+/** Concurrent-caller robustness for the operators that write a derived
+  * copy of their source once per source version (the partitioned
+  * orders copy behind q_scan_partition, the bucketed tables behind
+  * q_join_bucketed) and remember it as a `ResultCache` entry keyed by
+  * the copy's path or table name plus the source's `planKey`. Both
+  * publish via write-to-temp + atomic rename (or a synchronized
   * one-time write), so N racing callers must all see a complete,
   * correct copy — this spec actually races them from a cold cache
   * rather than trusting the comment. A multi-tenant Spark driver
@@ -32,9 +34,10 @@ class ConcurrencySpec extends SparkSpec {
   test("q_scan_partition: four concurrent cold callers agree and match the plain scan") {
     // fresh cache root via the graft.part.cache.dir SYSTEM PROPERTY —
     // highest precedence in scanPartition's resolution, so all callers
-    // start cold and race the copy/validate/rename path even if the
-    // GRAFT_PART_CACHE_DIR env var is set, and no process-global state
-    // (tmpdir) is touched for other tests.
+    // start cold (the memo key holds the copy's path, so an earlier
+    // suite's entry does not match) and race the copy/validate/rename
+    // path even if the GRAFT_PART_CACHE_DIR env var is set, and no
+    // process-global state (tmpdir) is touched for other tests.
     //
     // The property is JVM-GLOBAL: this spec assumes ScalaTest's
     // default sequential suite execution (parallelExecution stays off

@@ -2,6 +2,8 @@ package graft
 
 import java.io.File
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, Row}
 import org.apache.spark.sql.functions._
@@ -153,6 +155,94 @@ class MemoKeySpec extends SparkSpec {
 
   Seq("q_text_bpe_train", "q_text_longest_dup_span", "q_text_bigram_ll", "q_text_pmi")
     .foreach(refreshCase)
+
+  /** Refresh contract for the queries that read a DERIVED COPY of their
+    * source (partitioned orders, CSV customer, JSONL part, bucketed
+    * orders/lineitem): rewrite the sources in place, `clearCache()`,
+    * and the next call must answer what a plain read of the refreshed
+    * parquet answers — the oracle's aggregate, run by Spark over the
+    * tables themselves, with no copy in between. A fresh copy root
+    * (the `graft.part.cache.dir` property, restored afterwards as
+    * ConcurrencySpec does) keeps other suites' copies out of it. */
+  private def derivedRefreshCase(query: String): Unit =
+    test(s"refresh: $query serves the refreshed sources, not its pre-refresh derived copy") {
+      withTempDir("graft_refresh_copy") { tmp =>
+        val copyRoot = s"$tmp/copies"
+        val prev = System.getProperty("graft.part.cache.dir")
+        System.setProperty("graft.part.cache.dir", copyRoot)
+        val tables = Seq(
+          "customer" -> "c_custkey", "part" -> "p_partkey",
+          "orders" -> "o_orderkey", "lineitem" -> "l_orderkey")
+        def read(t: String) = spark.read.parquet(s"$tmp/$t.parquet")
+        def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+        def run(): Seq[Row] = sorted(SparkEntry.queries(query)(spark, tmp))
+        try {
+          tables.foreach { case (t, _) =>
+            spark.read.parquet(s"$dir/$t.parquet").write.parquet(s"$tmp/$t.parquet")
+          }
+          spark.catalog.clearCache()
+          val before = run()
+          // the refresh: every table rewritten in place without every
+          // third key
+          tables.foreach { case (t, key) =>
+            read(t).filter(col(key) % 3 =!= 0).write.parquet(s"$tmp/staged_$t")
+            FileUtils.deleteDirectory(new File(s"$tmp/$t.parquet"))
+            assert(new File(s"$tmp/staged_$t").renameTo(new File(s"$tmp/$t.parquet")))
+          }
+          spark.catalog.clearCache()
+          val after = run()
+          tables.foreach { case (t, _) => read(t).createOrReplaceTempView(t) }
+          val plain = try sorted(spark.sql(Oracle.sql(query)))
+            finally tables.foreach { case (t, _) => spark.catalog.dropTempView(t) }
+          // plain booleans: a failing `==` inside assert prints both
+          // whole answers
+          val (changed, matches) = (after != before, after == plain)
+          assert(changed, s"$query: the refresh did not change the answer")
+          assert(matches,
+            s"$query served a pre-refresh copy: ${after.take(3)} vs plain read ${plain.take(3)}")
+        } finally {
+          if (prev == null) System.clearProperty("graft.part.cache.dir")
+          else System.setProperty("graft.part.cache.dir", prev)
+          // the bucketed copies are catalog tables named after the dir
+          val tag = tmp.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
+          spark.catalog.listTables().collect().map(_.name).filter(_.contains(tag))
+            .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+          spark.catalog.clearCache()
+        }
+      }
+    }
+
+  Seq("q_scan_partition", "q_join_dpp", "q_scan_csv", "q_scan_jsonl", "q_join_bucketed")
+    .foreach(derivedRefreshCase)
+
+  test("no file under src/main but ResultCache keeps a mutable collection at object level") {
+    // a JVM-lifetime map or set beside the memo outlives a refresh: it
+    // is keyed by something other than planKey (a path string, a table
+    // name), so it answers for files that have since changed
+    val holder = """ConcurrentHashMap|newKeySet|TrieMap|\bmutable\.|java\.util\.[A-Za-z]*(Map|Set|List)\b""".r
+    val member = """^((private|protected)(\[\w+\])?\s+|final\s+|lazy\s+|@volatile\s+)*(val|var)\s""".r
+    val owner = """^((private|protected)(\[\w+\])?\s+|case\s+|final\s+)*(object|class|trait|def|val|var)\b""".r
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    def code(l: String) = { val t = l.trim; t.nonEmpty && !t.startsWith("*") && !t.startsWith("/") }
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "ResultCache.scala"))
+    val found = files.filterNot(_.getFileName.toString == "ResultCache.scala").flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+      lines.indices.filter(i => code(lines(i)) && member.findFirstIn(lines(i).trim).isDefined)
+        .filter { i =>
+          // the declaration plus its deeper-indented continuation lines
+          val decl = lines(i) +: lines.drop(i + 1).takeWhile(indent(_) > indent(lines(i)))
+          // the nearest enclosing definition is an object
+          val encl = lines.take(i).reverse
+            .find(l => code(l) && indent(l) < indent(lines(i)))
+          holder.findFirstIn(decl.mkString("\n")).isDefined &&
+            encl.flatMap(l => owner.findFirstMatchIn(l.trim)).exists(_.group(4) == "object")
+        }
+        .map(i => s"$p:${i + 1}: ${lines(i).trim}")
+    }
+    assert(found.isEmpty, s"object-level mutable state outside ResultCache:\n${found.mkString("\n")}")
+  }
 
   /** Jobs of `f` as Bench counts them: a listener plus an explicit
     * listener-bus drain (events arrive asynchronously). */
