@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * embedding the library in its own session should copy [[profile]]:
   * the mains' numbers are measured with it.
   *
-  * A main's session is `local[SPARK_GRAFT_CPUS]` (default 32) with one
-  * shuffle partition per core, then the `SPARK_GRAFT_EXTRA_CONFS`
-  * entries on top (see [[extraConfs]]).
+  * A main's session is `local[SPARK_GRAFT_CPUS]` (default: the host's
+  * available processors) with one shuffle partition per core, then the
+  * `SPARK_GRAFT_EXTRA_CONFS` entries on top (see [[extraConfs]]).
   */
 object GraftSession {
 
@@ -67,7 +67,7 @@ object GraftSession {
     * pins 32 so its output does not depend on the host). */
   def mainConfs(partitions: Option[String],
       env: String => Option[String] = sys.env.get): Seq[(String, String)] = {
-    val cores = env("SPARK_GRAFT_CPUS").getOrElse("32")
+    val cores = env("SPARK_GRAFT_CPUS").getOrElse(Runtime.getRuntime.availableProcessors.toString)
     profile(cores, partitions.getOrElse(cores)) ++
       env("SPARK_GRAFT_EXTRA_CONFS").toSeq.flatMap(extraConfs)
   }

@@ -58,84 +58,77 @@ object Clustering {
     // do not survive executor loss and have no lineage to recompute
     // through, so a lost block must invalidate the entry and rebuild —
     // the probe is a driver-side block-manager lookup, zero jobs.
-    val memoKey = s"kmeansAssign:${ResultCache.sessionId(df.sparkSession)}:" +
-      s"$idCol:$vecCol:$k:$rounds:$scale:${ResultCache.planKey(df)}"
-    ResultCache.getOrCompute[DataFrame](memoKey,
-      d => org.apache.spark.sql.GraftExpressionBridge.localCheckpointAlive(d))(
-      kmeansAssignBuild(df, idCol, vecCol, k, rounds, scale))
-  }
+    ResultCache.memo[DataFrame]("kmeansAssign", df, idCol, vecCol, k, rounds, scale)(
+        d => org.apache.spark.sql.GraftExpressionBridge.localCheckpointAlive(d)) {
+      // quantize + self-dot in ONE codegen'd pass per row — the HOF
+      // transform lambda this replaces was interpreted (64 closure calls
+      // per row) and dominated the 1M-vector assignment pass
+      val vecs = df
+        .select(col(idCol).as("__id"),
+          org.apache.spark.sql.GraftExpressionBridge.column(
+            graft.plans.DoubleArrayQuantizeFloor(
+              org.apache.spark.sql.GraftExpressionBridge.expression(col(vecCol)),
+              scale)).as("__q"))
+        .withColumn("__xx", VectorFunctions.dotFast(col("__q"), col("__q")))
+        .cache()
 
-  /** The un-memoized fit + assignment of [[kmeansAssign]]. */
-  private def kmeansAssignBuild(df: DataFrame, idCol: String, vecCol: String,
-      k: Int, rounds: Int, scale: Double): DataFrame = {
-    // quantize + self-dot in ONE codegen'd pass per row — the HOF
-    // transform lambda this replaces was interpreted (64 closure calls
-    // per row) and dominated the 1M-vector assignment pass
-    val vecs = df
-      .select(col(idCol).as("__id"),
-        org.apache.spark.sql.GraftExpressionBridge.column(
-          graft.plans.DoubleArrayQuantizeFloor(
-            org.apache.spark.sql.GraftExpressionBridge.expression(col(vecCol)),
-            scale)).as("__q"))
-      .withColumn("__xx", VectorFunctions.dotFast(col("__q"), col("__q")))
-      .cache()
+      // Seed centroids: the k smallest ids, labeled by rank in id order.
+      var centroids: Array[(Int, Array[Double])] =
+        vecs.orderBy(col("__id")).limit(k).collect().zipWithIndex.map {
+          case (r, i) => (i, r.getSeq[Double](1).toArray)
+        }
 
-    // Seed centroids: the k smallest ids, labeled by rank in id order.
-    var centroids: Array[(Int, Array[Double])] =
-      vecs.orderBy(col("__id")).limit(k).collect().zipWithIndex.map {
-        case (r, i) => (i, r.getSeq[Double](1).toArray)
+      var assigned: DataFrame = null
+      for (round <- 1 to rounds) {
+        // dist²(x, c) = |x|² − 2·x·c + |c|²; |c|² folds to a literal.
+        val cands = array(centroids.toSeq.map { case (cl, c) =>
+          val cc = c.map(v => v * v).sum
+          struct(
+            (col("__xx")
+              - lit(2.0) * VectorFunctions.dotFast(col("__q"), typedLit(c.toSeq))
+              + lit(cc)).as("d"),
+            lit(cl).as("c"))
+        }: _*)
+        assigned = vecs
+          .withColumn("__best", array_min(cands))
+          .select(col("__id"), col("__q"),
+            col("__best").getField("c").as("cluster"),
+            col("__best").getField("d").as("dist"))
+        if (round < rounds) {
+          // element-wise centroid sums as dim SEPARATE codegen'd double
+          // aggregates (whole-stage, primitive) — the typed Aggregator
+          // alternative deserializes a boxed Seq[Double] per row (64M
+          // boxes per pass at 1M×64), measured as a GC storm at x100
+          val dim = centroids.head._2.length
+          val sums = (0 until dim).map(i =>
+            sum(element_at(col("__q"), i + 1)).as(s"s$i")) :+ count(lit(1)).as("n")
+          centroids = assigned
+            .groupBy(col("cluster"))
+            .agg(sums.head, sums.tail: _*)
+            .collect()
+            .map { r =>
+              val n = r.getLong(dim + 1).toDouble
+              (r.getInt(0), Array.tabulate(dim)(i => math.floor(r.getDouble(i + 1) / n)))
+            }
+            .sortBy(_._1)
+        }
       }
-
-    var assigned: DataFrame = null
-    for (round <- 1 to rounds) {
-      // dist²(x, c) = |x|² − 2·x·c + |c|²; |c|² folds to a literal.
-      val cands = array(centroids.toSeq.map { case (cl, c) =>
-        val cc = c.map(v => v * v).sum
-        struct(
-          (col("__xx")
-            - lit(2.0) * VectorFunctions.dotFast(col("__q"), typedLit(c.toSeq))
-            + lit(cc)).as("d"),
-          lit(cl).as("c"))
-      }: _*)
-      assigned = vecs
-        .withColumn("__best", array_min(cands))
-        .select(col("__id"), col("__q"),
-          col("__best").getField("c").as("cluster"),
-          col("__best").getField("d").as("dist"))
-      if (round < rounds) {
-        // element-wise centroid sums as dim SEPARATE codegen'd double
-        // aggregates (whole-stage, primitive) — the typed Aggregator
-        // alternative deserializes a boxed Seq[Double] per row (64M
-        // boxes per pass at 1M×64), measured as a GC storm at x100
-        val dim = centroids.head._2.length
-        val sums = (0 until dim).map(i =>
-          sum(element_at(col("__q"), i + 1)).as(s"s$i")) :+ count(lit(1)).as("n")
-        centroids = assigned
-          .groupBy(col("cluster"))
-          .agg(sums.head, sums.tail: _*)
-          .collect()
-          .map { r =>
-            val n = r.getLong(dim + 1).toDouble
-            (r.getInt(0), Array.tabulate(dim)(i => math.floor(r.getDouble(i + 1) / n)))
-          }
-          .sortBy(_._1)
-      }
+      // Release the quantized-corpus cache before returning (review
+      // finding: the handle is internal, so a long-lived session calling
+      // this repeatedly would otherwise pin ~raw-data-sized executor
+      // storage per call with no way to free it). The final assignment —
+      // three narrow columns, no vectors — is materialized eagerly via
+      // localCheckpoint first so the last pass still reads the cache;
+      // checkpoint blocks are reference-tracked by the ContextCleaner
+      // and self-release when the result goes out of scope, unlike
+      // CacheManager entries. (Same durability trade as the
+      // pointer-jumping loop in api.Dedup: a localCheckpoint does not
+      // survive executor loss; acceptable for a result this small.)
+      val out = assigned
+        .select(col("__id").as(idCol), col("cluster"), col("dist"))
+        .localCheckpoint()
+      vecs.unpersist(false)
+      out
     }
-    // Release the quantized-corpus cache before returning (review
-    // finding: the handle is internal, so a long-lived session calling
-    // this repeatedly would otherwise pin ~raw-data-sized executor
-    // storage per call with no way to free it). The final assignment —
-    // three narrow columns, no vectors — is materialized eagerly via
-    // localCheckpoint first so the last pass still reads the cache;
-    // checkpoint blocks are reference-tracked by the ContextCleaner
-    // and self-release when the result goes out of scope, unlike
-    // CacheManager entries. (Same durability trade as the
-    // pointer-jumping loop in api.Dedup: a localCheckpoint does not
-    // survive executor loss; acceptable for a result this small.)
-    val out = assigned
-      .select(col("__id").as(idCol), col("cluster"), col("dist"))
-      .localCheckpoint()
-    vecs.unpersist(false)
-    out
   }
 }

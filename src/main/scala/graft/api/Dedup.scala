@@ -210,17 +210,14 @@ object Dedup {
     // and filters, and the row count the sizing needs is itself
     // memoized against that key — one count job on a miss, none on a
     // hit.
-    val spark = refDf.sparkSession
-    val refKey = s"${ResultCache.sessionId(spark)}:${ResultCache.planKey(refKeys)}"
-    val nRef: Long = math.max(1L, ResultCache.getOrCompute[java.lang.Long](
-      s"crossCorpusRefCount:$refKey", _ => true)(refDf.count()))
+    val nRef: Long = math.max(1L, ResultCache.memo[java.lang.Long](
+      "crossCorpusRefCount", refKeys)(_ => true)(refDf.count()))
     val (nBuckets, itemsPerBucket, bitsPerBucket) = bloomBucketPlan(nRef, fpp, buckets)
     def keyHash = new XxHash64(Seq(GraftExpressionBridge.eagerExpression(col("__k"))))
     // bucket id: an independent hash seed from the filter's key hash —
     // pmod handles xxhash64's full (negative-inclusive) range
     def bucketOf = pmod(xxhash64(lit("__graft_bucket"), col("__k")), lit(nBuckets))
-    val filters = ResultCache.getOrCompute[DataFrame](
-      s"crossCorpusBloomParts:$fpp:$nBuckets:$refKey",
+    val filters = ResultCache.memo("crossCorpusBloomParts", refKeys, fpp, nBuckets)(
       ResultCache.isCached) {
       // bucket AND key hash computed MAP-SIDE so the build exchange
       // carries (long, long) rows, not the ~200-byte normalized-text
@@ -406,96 +403,90 @@ object Dedup {
     * [[minhashLsh]]. */
   private[graft] def jaccardPairs(shingled0: DataFrame, thr: Double, maxDf: Int): DataFrame = {
     // handle memo + IMR-leaf — same round-15 rationale as [[minhashLsh]]
-    val key = s"jaccardPairs:${ResultCache.sessionId(shingled0.sparkSession)}:" +
-      s"$thr:$maxDf:${ResultCache.planKey(shingled0)}"
-    ResultCache.getOrComputeCachedLeaf(key)(
-      jaccardPairsBuild(shingled0, thr, maxDf))
-  }
-
-  /** The un-memoized pipeline of [[jaccardPairs]]. */
-  private def jaccardPairsBuild(shingled0: DataFrame, thr: Double, maxDf: Int): DataFrame = {
-    // DISK_ONLY, not .cache(): the shingle relation is CORPUS-sized
-    // fat arrays, and a MEMORY_AND_DISK in-memory leg fills unified
-    // storage to its protected floor and starves the posting/pair
-    // aggregates it feeds — the identical wall dedupSpans hit in the
-    // round-10 local-cluster rehearsal (exit 52). Round-11 measured it
-    // here: x100 under 2×5 g executors died UNABLE_TO_ACQUIRE_MEMORY →
-    // heap OOM in the posting aggregate with .cache(), runs clean
-    // DISK_ONLY (numbers in BASELINE.md). The disk leg is the scalable
-    // leg; warm repeats are plan-cache hits on the final pair relation
-    // anyway.
-    val shingled = graft.api.Persists.diskOnly(shingled0)
-    val sizes = shingled.select(col("doc_id"), size(col("shingles")).as("sz"))
-    // The MULTI-doc grouped posting relation is built ONCE and cached:
-    // it feeds the in-bucket pair expansion AND the per-doc over-cap
-    // counts below. Three round-8 measurements shaped it: grouped
-    // (sh → doc list) rather than exploded rows collapses the df cap
-    // into a size() filter and the old posting self-join's two
-    // corpus-sized exchanges into one aggregate exchange (see
-    // inBucketPairs); dropping the df = 1 tail BEFORE the cache
-    // matters more than either — 47.3M of 48M groups at x10 were
-    // single-doc, and caching them cost 22.8 s for rows no consumer
-    // needs as rows (their only use, per-doc capped counts, is
-    // recoverable as sz − oc).
-    val multi = multiPostings(shingled, maxDf).cache()
-    // ONE per-doc stats relation (size + over-cap count) joined per
-    // pair side, not four separate joins: each broadcast build is its
-    // own Spark job, and on a contended driver jobs ≈ cost. The
-    // over-cap count oc_d comes DIRECTLY from the over-cap groups of
-    // the tiny multi relation (shingle sets are distinct per doc, so
-    // |d's shingles with df > maxDf| is one explode + count over
-    // lists longer than maxDf). Uncapped, oc = 0 by construction —
-    // a constant-0 column, no join. The capped-path stats stay cached:
-    // each pair side otherwise re-executes the join build as its own
-    // broadcast job.
-    val docStats =
-      if (maxDf == Int.MaxValue) sizes.withColumn("oc", lit(0L))
-      else {
-        // over-cap MEMBERSHIP cannot come from the bounded lists (they
-        // are truncated for exactly these groups) — it is a semi-join
-        // of the posting stream against the over-cap KEY set, which is
-        // bounded by construction (|bad| ≤ postings/maxDf) and
-        // broadcastable at any corpus size. When no group is over-cap
-        // the empty broadcast side lets AQE collapse the join (and the
-        // posting re-derivation above it) to an empty relation.
-        val badKeys = multi.filter(col("__df") > maxDf).select(col("sh"))
-        val ocCnt = shingled
-          .select(col("doc_id"), explode(col("shingles")).as("sh0"))
-          .select(col("doc_id"), shDigest(col("sh0")).as("sh"))
-          .join(broadcast(badKeys), Seq("sh"), "left_semi")
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("__oc"))
-        sizes.join(ocCnt, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("sz"),
-            coalesce(col("__oc"), lit(0L)).as("oc"))
-          .cache()
-      }
-    val bounded = pairIntersections(multi, maxDf)
-      .join(docStats.select(col("doc_id").as("a_id"), col("sz").as("sz_a"),
-        col("oc").as("oc_a")), "a_id")
-      .join(docStats.select(col("doc_id").as("b_id"), col("sz").as("sz_b"),
-        col("oc").as("oc_b")), "b_id")
-      .withColumn("m", least(col("oc_a"), col("oc_b")))
-      .filter((col("cnt_c") + col("m")).cast("double")
-        / (col("sz_a") + col("sz_b") - col("cnt_c") - col("m")) >= thr - 1e-6)
-    // no broadcast hint on the survivors: their count is data-dependent
-    // (a duplicate-heavy corpus legitimately has many true pairs), so
-    // the join strategy is left to the optimizer — AQE's runtime stats
-    // broadcast them when small and shuffle them when not
-    bounded.select(col("a_id"), col("b_id"))
-      .join(shingled.select(col("doc_id").as("a_id"), col("shingles").as("sh_a")), "a_id")
-      .join(shingled.select(col("doc_id").as("b_id"), col("shingles").as("sh_b")), "b_id")
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", round(
-        col("n_inter").cast("double") / (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")), 6))
-      .filter(col("jaccard") >= thr)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
-      .orderBy(col("a_id"), col("b_id"))
-      // the FINAL pair relation is cached too: a repeat call builds the
-      // identical canonical plan, so CacheManager serves the whole
-      // query from this (near-dup-pair-sized, evictable) entry — the
-      // steady-state run collapses to one cache-scan job instead of
-      // replaying the verify joins (8 jobs measured at sf0.1)
-      .cache()
+    ResultCache.memoLeaf("jaccardPairs", shingled0, thr, maxDf) {
+      // DISK_ONLY, not .cache(): the shingle relation is CORPUS-sized
+      // fat arrays, and a MEMORY_AND_DISK in-memory leg fills unified
+      // storage to its protected floor and starves the posting/pair
+      // aggregates it feeds — the identical wall dedupSpans hit in the
+      // round-10 local-cluster rehearsal (exit 52). Round-11 measured it
+      // here: x100 under 2×5 g executors died UNABLE_TO_ACQUIRE_MEMORY →
+      // heap OOM in the posting aggregate with .cache(), runs clean
+      // DISK_ONLY (numbers in BASELINE.md). The disk leg is the scalable
+      // leg; warm repeats are plan-cache hits on the final pair relation
+      // anyway.
+      val shingled = graft.api.Persists.diskOnly(shingled0)
+      val sizes = shingled.select(col("doc_id"), size(col("shingles")).as("sz"))
+      // The MULTI-doc grouped posting relation is built ONCE and cached:
+      // it feeds the in-bucket pair expansion AND the per-doc over-cap
+      // counts below. Three round-8 measurements shaped it: grouped
+      // (sh → doc list) rather than exploded rows collapses the df cap
+      // into a size() filter and the old posting self-join's two
+      // corpus-sized exchanges into one aggregate exchange (see
+      // inBucketPairs); dropping the df = 1 tail BEFORE the cache
+      // matters more than either — 47.3M of 48M groups at x10 were
+      // single-doc, and caching them cost 22.8 s for rows no consumer
+      // needs as rows (their only use, per-doc capped counts, is
+      // recoverable as sz − oc).
+      val multi = multiPostings(shingled, maxDf).cache()
+      // ONE per-doc stats relation (size + over-cap count) joined per
+      // pair side, not four separate joins: each broadcast build is its
+      // own Spark job, and on a contended driver jobs ≈ cost. The
+      // over-cap count oc_d comes DIRECTLY from the over-cap groups of
+      // the tiny multi relation (shingle sets are distinct per doc, so
+      // |d's shingles with df > maxDf| is one explode + count over
+      // lists longer than maxDf). Uncapped, oc = 0 by construction —
+      // a constant-0 column, no join. The capped-path stats stay cached:
+      // each pair side otherwise re-executes the join build as its own
+      // broadcast job.
+      val docStats =
+        if (maxDf == Int.MaxValue) sizes.withColumn("oc", lit(0L))
+        else {
+          // over-cap MEMBERSHIP cannot come from the bounded lists (they
+          // are truncated for exactly these groups) — it is a semi-join
+          // of the posting stream against the over-cap KEY set, which is
+          // bounded by construction (|bad| ≤ postings/maxDf) and
+          // broadcastable at any corpus size. When no group is over-cap
+          // the empty broadcast side lets AQE collapse the join (and the
+          // posting re-derivation above it) to an empty relation.
+          val badKeys = multi.filter(col("__df") > maxDf).select(col("sh"))
+          val ocCnt = shingled
+            .select(col("doc_id"), explode(col("shingles")).as("sh0"))
+            .select(col("doc_id"), shDigest(col("sh0")).as("sh"))
+            .join(broadcast(badKeys), Seq("sh"), "left_semi")
+            .groupBy(col("doc_id")).agg(count(lit(1)).as("__oc"))
+          sizes.join(ocCnt, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("sz"),
+              coalesce(col("__oc"), lit(0L)).as("oc"))
+            .cache()
+        }
+      val bounded = pairIntersections(multi, maxDf)
+        .join(docStats.select(col("doc_id").as("a_id"), col("sz").as("sz_a"),
+          col("oc").as("oc_a")), "a_id")
+        .join(docStats.select(col("doc_id").as("b_id"), col("sz").as("sz_b"),
+          col("oc").as("oc_b")), "b_id")
+        .withColumn("m", least(col("oc_a"), col("oc_b")))
+        .filter((col("cnt_c") + col("m")).cast("double")
+          / (col("sz_a") + col("sz_b") - col("cnt_c") - col("m")) >= thr - 1e-6)
+      // no broadcast hint on the survivors: their count is data-dependent
+      // (a duplicate-heavy corpus legitimately has many true pairs), so
+      // the join strategy is left to the optimizer — AQE's runtime stats
+      // broadcast them when small and shuffle them when not
+      bounded.select(col("a_id"), col("b_id"))
+        .join(shingled.select(col("doc_id").as("a_id"), col("shingles").as("sh_a")), "a_id")
+        .join(shingled.select(col("doc_id").as("b_id"), col("shingles").as("sh_b")), "b_id")
+        .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("jaccard", round(
+          col("n_inter").cast("double") / (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")), 6))
+        .filter(col("jaccard") >= thr)
+        .select(col("a_id"), col("b_id"), col("jaccard"))
+        .orderBy(col("a_id"), col("b_id"))
+        // the FINAL pair relation is cached too: a repeat call builds the
+        // identical canonical plan, so CacheManager serves the whole
+        // query from this (near-dup-pair-sized, evictable) entry — the
+        // steady-state run collapses to one cache-scan job instead of
+        // replaying the verify joins (8 jobs measured at sf0.1)
+        .cache()
+    }
   }
 
   // The candidate-side occupancy cap that used to live in a dedicated
@@ -586,138 +577,129 @@ object Dedup {
     // plan; validity follows the cache entry exactly as before
     // (clearCache ⇒ fresh build). Key = the sketchEmb idiom: session +
     // parameters + the INPUT plan's canonical semantic hash.
-    val key = s"minhashLsh:${ResultCache.sessionId(df.sparkSession)}:$idCol:$textCol:" +
-      s"$n:$bands:$rowsPerBand:$threshold:$maxBandOccupancy:" +
-      ResultCache.planKey(df)
-    ResultCache.getOrComputeCachedLeaf(key)(
-      minhashLshBuild(df, idCol, textCol, n, bands, rowsPerBand, threshold,
-        maxBandOccupancy))
-  }
-
-  /** The un-memoized pipeline of [[minhashLsh]]. */
-  private def minhashLshBuild(df: DataFrame, idCol: String, textCol: String,
-      n: Int, bands: Int, rowsPerBand: Int, threshold: Double,
-      maxBandOccupancy: Int): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // NO corpus-wide shingle cache (round-9 x100 finding): caching the
-    // shingled corpus — the round-8 design — was the FIRST memory wall
-    // at x100/8g, before any aggregate ran: ~8.5 GB of shingle strings
-    // over 32 partitions means 32 concurrent tasks each BUILD a
-    // ~270 MB columnar block before eviction can help (a phase bisection
-    // pinned the OOM to the cache-materialization stage alone; BASELINE.md
-    // "Round-9: q_dedup_minhash past the x100 single-node memory
-    // ceiling"). The corpus pass now computes shingles inline exactly
-    // once — inside the signature projection — and only the CANDIDATE
-    // docs (a pair-mass-sized set, below) are ever re-shingled for
-    // verification.
-    val spreadDocs = spread(df)
-    // persisted DISK_ONLY: the band relation is consumed TWICE by
-    // count-then-prune candidate generation (occupancy counts, then
-    // the pruned list aggregate), and the signature pass —
-    // numHashes×|shingles| xxhashes per doc — is the expensive stage
-    // to recompute. 10M docs × (id + 64 ints) ≈ 2.7 GB raw — bounded
-    // per-doc records independent of document length, unlike the
-    // shingle arrays. DISK_ONLY, not MEMORY_AND_DISK, deliberately
-    // (x100/8g measurement): in-memory persisted batches pin unified
-    // storage up to the protected fraction, and the 160M-row band
-    // count aggregate right after then fails UNABLE_TO_ACQUIRE_MEMORY
-    // — the persist starved the very aggregate it feeds. Disk
-    // read-back of the compressed columnar batches is seconds; at
-    // sf0.1 the relation is a few KB either way.
-    val sigs = minhashSignatures(
-        shingles(spreadDocs, idCol, textCol, n), numHashes)
-      .transform(graft.api.Persists.diskOnly)
-    // Candidate generation is ONE grouped aggregate over the band
-    // relation, not a bucket-key self-join (round-8 restructure,
-    // measured at x10): the self-join's two sides each rebuilt the
-    // 16M-row band exchange (ReuseExchange does NOT fire across the
-    // a/b subtrees) and capBuckets' occupancy aggregate added a third
-    // — ~21 s for 16k candidates. Grouping once to doc LISTS per
-    // bucket carries the same 16M rows through ONE exchange, the
-    // occupancy cap becomes a size() filter on the grouped row (same
-    // drop-over-cap semantics as capBuckets), and in-bucket pair
-    // expansion runs on the collapsed stream (buckets with ≥ 2 docs —
-    // thousands, not millions). Pairs compare VALUES (y > x), so the
-    // result is independent of collect_list's partition-dependent
-    // order: same (a < b) pair set as the join, measured 21.4 →
-    // 11.1 s end-to-end with identical candidate counts.
-    // BOUNDED list + true count (graft.plans.BoundedCollectList): a
-    // degenerate band key must never materialize its full membership
-    // as one buffer row — the occupancy filter reads the COUNT column
-    // (exact even when the list is truncated at cap+1), and kept
-    // buckets' lists are complete by construction (occ ≤ cap).
-    // COUNT-THEN-PRUNE (round-9, the x100 memory-ceiling fix): the
-    // list aggregate above used to run over the FULL band stream —
-    // |docs|×bands rows, nearly all singleton buckets — so at x100
-    // (160M rows) every partition held millions of object list
-    // buffers and the ObjectHashAggregate's sort-based spill was the
-    // only survival path (8g/32g heap: OOM-or-crawl; BASELINE.md
-    // round-8 x100 notes). Restructured: (1) a fixed-width COUNT
-    // aggregate over the band stream — codegen'd HashAggregate,
-    // 8-byte buffers, spills cheaply, no objects; (2) keep only keys
-    // with 2 ≤ occ ≤ cap (singletons produce no pairs; over-cap
-    // buckets were already dropped — same pair set by construction);
-    // (3) semi-join the band stream against the surviving keys
-    // (AQE broadcasts the key set when it is small — the common
-    // case — and falls back to a shuffled hash join when a dup-heavy
-    // corpus makes it large, so nothing here assumes a small
-    // qualifying set); (4) the object list aggregate now sees ONLY
-    // qualifying-bucket rows — bounded by the candidate-pair mass,
-    // not the corpus. Per-executor object-buffer count is bounded by
-    // design, not by cluster width.
-    val bandRel = minhashBandBuckets(sigs, bands, rowsPerBand)
-    val liveKeys = bandRel
-      .groupBy(col("band_idx"), col("band_key"))
-      .agg(count(lit(1)).as("__occ"))
-      .filter(col("__occ") >= 2 && col("__occ") <= maxBandOccupancy)
-      .select(col("band_idx"), col("band_key"))
-    val cand = inBucketPairs(
-      bandRel
-        .join(liveKeys, Seq("band_idx", "band_key"), "left_semi")
+    ResultCache.memoLeaf("minhashLsh", df, idCol, textCol, n, bands, rowsPerBand, threshold,
+        maxBandOccupancy) {
+      val numHashes = bands * rowsPerBand
+      // NO corpus-wide shingle cache (round-9 x100 finding): caching the
+      // shingled corpus — the round-8 design — was the FIRST memory wall
+      // at x100/8g, before any aggregate ran: ~8.5 GB of shingle strings
+      // over 32 partitions means 32 concurrent tasks each BUILD a
+      // ~270 MB columnar block before eviction can help (a phase bisection
+      // pinned the OOM to the cache-materialization stage alone; BASELINE.md
+      // "Round-9: q_dedup_minhash past the x100 single-node memory
+      // ceiling"). The corpus pass now computes shingles inline exactly
+      // once — inside the signature projection — and only the CANDIDATE
+      // docs (a pair-mass-sized set, below) are ever re-shingled for
+      // verification.
+      val spreadDocs = spread(df)
+      // persisted DISK_ONLY: the band relation is consumed TWICE by
+      // count-then-prune candidate generation (occupancy counts, then
+      // the pruned list aggregate), and the signature pass —
+      // numHashes×|shingles| xxhashes per doc — is the expensive stage
+      // to recompute. 10M docs × (id + 64 ints) ≈ 2.7 GB raw — bounded
+      // per-doc records independent of document length, unlike the
+      // shingle arrays. DISK_ONLY, not MEMORY_AND_DISK, deliberately
+      // (x100/8g measurement): in-memory persisted batches pin unified
+      // storage up to the protected fraction, and the 160M-row band
+      // count aggregate right after then fails UNABLE_TO_ACQUIRE_MEMORY
+      // — the persist starved the very aggregate it feeds. Disk
+      // read-back of the compressed columnar batches is seconds; at
+      // sf0.1 the relation is a few KB either way.
+      val sigs = minhashSignatures(
+          shingles(spreadDocs, idCol, textCol, n), numHashes)
+        .transform(graft.api.Persists.diskOnly)
+      // Candidate generation is ONE grouped aggregate over the band
+      // relation, not a bucket-key self-join (round-8 restructure,
+      // measured at x10): the self-join's two sides each rebuilt the
+      // 16M-row band exchange (ReuseExchange does NOT fire across the
+      // a/b subtrees) and capBuckets' occupancy aggregate added a third
+      // — ~21 s for 16k candidates. Grouping once to doc LISTS per
+      // bucket carries the same 16M rows through ONE exchange, the
+      // occupancy cap becomes a size() filter on the grouped row (same
+      // drop-over-cap semantics as capBuckets), and in-bucket pair
+      // expansion runs on the collapsed stream (buckets with ≥ 2 docs —
+      // thousands, not millions). Pairs compare VALUES (y > x), so the
+      // result is independent of collect_list's partition-dependent
+      // order: same (a < b) pair set as the join, measured 21.4 →
+      // 11.1 s end-to-end with identical candidate counts.
+      // BOUNDED list + true count (graft.plans.BoundedCollectList): a
+      // degenerate band key must never materialize its full membership
+      // as one buffer row — the occupancy filter reads the COUNT column
+      // (exact even when the list is truncated at cap+1), and kept
+      // buckets' lists are complete by construction (occ ≤ cap).
+      // COUNT-THEN-PRUNE (round-9, the x100 memory-ceiling fix): the
+      // list aggregate above used to run over the FULL band stream —
+      // |docs|×bands rows, nearly all singleton buckets — so at x100
+      // (160M rows) every partition held millions of object list
+      // buffers and the ObjectHashAggregate's sort-based spill was the
+      // only survival path (8g/32g heap: OOM-or-crawl; BASELINE.md
+      // round-8 x100 notes). Restructured: (1) a fixed-width COUNT
+      // aggregate over the band stream — codegen'd HashAggregate,
+      // 8-byte buffers, spills cheaply, no objects; (2) keep only keys
+      // with 2 ≤ occ ≤ cap (singletons produce no pairs; over-cap
+      // buckets were already dropped — same pair set by construction);
+      // (3) semi-join the band stream against the surviving keys
+      // (AQE broadcasts the key set when it is small — the common
+      // case — and falls back to a shuffled hash join when a dup-heavy
+      // corpus makes it large, so nothing here assumes a small
+      // qualifying set); (4) the object list aggregate now sees ONLY
+      // qualifying-bucket rows — bounded by the candidate-pair mass,
+      // not the corpus. Per-executor object-buffer count is bounded by
+      // design, not by cluster width.
+      val bandRel = minhashBandBuckets(sigs, bands, rowsPerBand)
+      val liveKeys = bandRel
         .groupBy(col("band_idx"), col("band_key"))
-        .agg(boundedList(col("doc_id"), maxBandOccupancy).as("ds"),
-          count(lit(1)).as("__occ"))
-        .filter(col("__occ") <= maxBandOccupancy),
-      "ds")
-      .distinct()
-      // cached: cand feeds the candidate-id set AND the verification
-      // join below — without it the whole band pipeline would replay.
-      // Size = candidate-pair mass (thousands at rehearsal scales).
-      .cache()
-    // Re-shingle ONLY the candidate docs for verification: semi-join
-    // the raw docs against the candidate-id set (AQE broadcasts it
-    // when small — the common case — and falls back to a shuffled
-    // hash join on a dup-heavy corpus), then compute their shingle
-    // arrays. The cached result is pair-mass-sized, so its exact size
-    // statistics still drive the verification joins to broadcast —
-    // the round-2 lesson that motivated the old corpus-wide cache,
-    // kept at a bounded footprint.
-    val candIds = cand
-      .select(explode(array(col("a_id"), col("b_id"))).as("__cand_id"))
-      .distinct()
-    // raw df, NOT spreadDocs: spread is a full corpus-text shuffle,
-    // load-bearing only where heavy per-row compute precedes the
-    // first exchange (the signature pass). Here the scan just feeds a
-    // semi-join hash probe; only the few survivors pay the shingle
-    // compute (measured x10: spread on this branch cost ~7 s of pure
-    // re-shuffle).
-    val candShingled = shingles(
-        df.join(candIds, col(idCol) === col("__cand_id"), "left_semi"),
-        idCol, textCol, n)
-      .cache()
-    cand
-      .join(candShingled.select(col("doc_id").as("a_id"), col("shingles").as("sh_a")), "a_id")
-      .join(candShingled.select(col("doc_id").as("b_id"), col("shingles").as("sh_b")), "b_id")
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", round(
-        col("n_inter").cast("double") / (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
-      .orderBy(col("a_id"), col("b_id"))
-      // final pair relation cached — same steady-state rationale as
-      // [[jaccardPairs]]: a repeat call plan-matches this entry and
-      // skips the candidate + verify replay entirely
-      .cache()
+        .agg(count(lit(1)).as("__occ"))
+        .filter(col("__occ") >= 2 && col("__occ") <= maxBandOccupancy)
+        .select(col("band_idx"), col("band_key"))
+      val cand = inBucketPairs(
+        bandRel
+          .join(liveKeys, Seq("band_idx", "band_key"), "left_semi")
+          .groupBy(col("band_idx"), col("band_key"))
+          .agg(boundedList(col("doc_id"), maxBandOccupancy).as("ds"),
+            count(lit(1)).as("__occ"))
+          .filter(col("__occ") <= maxBandOccupancy),
+        "ds")
+        .distinct()
+        // cached: cand feeds the candidate-id set AND the verification
+        // join below — without it the whole band pipeline would replay.
+        // Size = candidate-pair mass (thousands at rehearsal scales).
+        .cache()
+      // Re-shingle ONLY the candidate docs for verification: semi-join
+      // the raw docs against the candidate-id set (AQE broadcasts it
+      // when small — the common case — and falls back to a shuffled
+      // hash join on a dup-heavy corpus), then compute their shingle
+      // arrays. The cached result is pair-mass-sized, so its exact size
+      // statistics still drive the verification joins to broadcast —
+      // the round-2 lesson that motivated the old corpus-wide cache,
+      // kept at a bounded footprint.
+      val candIds = cand
+        .select(explode(array(col("a_id"), col("b_id"))).as("__cand_id"))
+        .distinct()
+      // raw df, NOT spreadDocs: spread is a full corpus-text shuffle,
+      // load-bearing only where heavy per-row compute precedes the
+      // first exchange (the signature pass). Here the scan just feeds a
+      // semi-join hash probe; only the few survivors pay the shingle
+      // compute (measured x10: spread on this branch cost ~7 s of pure
+      // re-shuffle).
+      val candShingled = shingles(
+          df.join(candIds, col(idCol) === col("__cand_id"), "left_semi"),
+          idCol, textCol, n)
+        .cache()
+      cand
+        .join(candShingled.select(col("doc_id").as("a_id"), col("shingles").as("sh_a")), "a_id")
+        .join(candShingled.select(col("doc_id").as("b_id"), col("shingles").as("sh_b")), "b_id")
+        .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("jaccard", round(
+          col("n_inter").cast("double") / (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")), 6))
+        .filter(col("jaccard") >= threshold)
+        .select(col("a_id"), col("b_id"), col("jaccard"))
+        .orderBy(col("a_id"), col("b_id"))
+        // final pair relation cached — same steady-state rationale as
+        // [[jaccardPairs]]: a repeat call plan-matches this entry and
+        // skips the candidate + verify replay entirely
+        .cache()
+    }
   }
 
   /** Collapse near-dup PAIRS into clusters (connected components): a
@@ -779,77 +761,69 @@ object Dedup {
     * bloom clamps; its partitioned form no longer touches any conf.) */
   private[graft] def clusterPairsRounds(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 20): (DataFrame, Int) = {
-    val key = s"clusterPlan:${ResultCache.sessionId(pairs.sparkSession)}:" +
-      s"$aCol:$bCol:$maxIters:${ResultCache.planKey(pairs)}"
-    ResultCache.getOrCompute[((DataFrame, Int), DataFrame)](key,
-      { case (_, gen) => ResultCache.isCached(gen) }) {
-      val (res, rounds, gen) = clusterPairsRoundsBuild(pairs, aCol, bCol, maxIters)
-      ((res, rounds), gen)
-    }._1
-  }
-
-  /** The un-memoized body of [[clusterPairsRounds]];
-    * additionally returns the cached-generation handle the validity
-    * probe must watch. */
-  private def clusterPairsRoundsBuild(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int): (DataFrame, Int, DataFrame) = {
-    // fwd is CACHED before the symmetrize union: both union branches
-    // reference the full upstream pair-generation plan, and un-cached
-    // each branch re-executes that plan's AQE stages as separate jobs
-    // (measured on q_dedup_semantic: 34 jobs/run un-cached vs 21
-    // cached — job count is the contention-sensitivity metric)
-    val fwd = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .cache()
-    // AQE is DISABLED for the checkpoint + loop window: every input is
-    // a cached relation with exact size statistics, so static planning
-    // already picks the right (broadcast) joins — while AQE materializes
-    // each round's (and the pair-generation plan's) exchanges as
-    // separate stage jobs (~5 driver round-trips per round, ~13 extra
-    // jobs for the lazy fwd/edges materialization, both measured on
-    // q_dedup_semantic). Each job is a fixed-latency round-trip on a
-    // contended driver, so this window is exactly where job count
-    // matters. This library's own pair generators are skew-bounded by
-    // construction (bucket occupancy caps, shingle df caps), so static
-    // planning of that stage is safe; a caller with an unbounded pair
-    // plan that needs AQE's skew handling should materialize (cache +
-    // count) its pairs before calling. The conf is restored in the
-    // finally; single-threaded session use is the assumption the
-    // bench/verify harnesses already make.
-    val spark = pairs.sparkSession
-    val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // LINEAGE TRUNCATION first (round-8, measured): every loop
-      // round's plan would otherwise embed the caller's whole
-      // pair-generation tree, and for a wide
-      // plan the DRIVER-side analysis/optimization of that tree per
-      // reference dwarfs the executed jobs (q_dedup_semantic's 14-level
-      // sketch plan spent ~33 s of a 37 s cluster call in planning;
-      // jobs totaled 4.6 s). localCheckpoint materializes the cached
-      // edge list into a LogicalRDD leaf in ONE pass, after which the
-      // rounds plan over a leaf-sized tree.
-      // Trade: a localCheckpoint does not survive executor loss (the
-      // query fails rather than recomputes) — the standard iterative-
-      // loop trade; the next call simply recomputes fresh.
-      val fwdT = fwd.localCheckpoint()
-      // gen is the HANDLE the final round's cache was registered under
-      // (the memo's validity must probe that exact plan — a projection
-      // of it reports StorageLevel.NONE), so the public column shape is
-      // derived from it
-      val (gen, rounds) = propagateLabels(fwdT, maxIters)
-      (gen.select(col("id").as("doc_id"), col("comp").as("canonical_doc"))
-        .orderBy(col("doc_id")), rounds, gen)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
-      // fwd's cache is deliberately NOT unpersisted: a memo miss over
-      // the same pairs (another maxIters or column pair, or labels
-      // evicted while fwd survived) checkpoints from the in-memory pair
-      // list instead of re-materializing the caller's whole
-      // pair-generation plan. Same session-lifetime contract, same
-      // few-MB evictable cost, and same clearCache() guidance as
-      // [[minhashLsh]]'s shingle cache.
-      ()
+    // the entry also holds the cached-generation handle the validity
+    // probe must watch
+    val (res, rounds, _) = ResultCache.memo[(DataFrame, Int, DataFrame)](
+        "clusterPlan", pairs, aCol, bCol, maxIters)(r => ResultCache.isCached(r._3)) {
+      // fwd is CACHED before the symmetrize union: both union branches
+      // reference the full upstream pair-generation plan, and un-cached
+      // each branch re-executes that plan's AQE stages as separate jobs
+      // (measured on q_dedup_semantic: 34 jobs/run un-cached vs 21
+      // cached — job count is the contention-sensitivity metric)
+      val fwd = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+        .cache()
+      // AQE is DISABLED for the checkpoint + loop window: every input is
+      // a cached relation with exact size statistics, so static planning
+      // already picks the right (broadcast) joins — while AQE materializes
+      // each round's (and the pair-generation plan's) exchanges as
+      // separate stage jobs (~5 driver round-trips per round, ~13 extra
+      // jobs for the lazy fwd/edges materialization, both measured on
+      // q_dedup_semantic). Each job is a fixed-latency round-trip on a
+      // contended driver, so this window is exactly where job count
+      // matters. This library's own pair generators are skew-bounded by
+      // construction (bucket occupancy caps, shingle df caps), so static
+      // planning of that stage is safe; a caller with an unbounded pair
+      // plan that needs AQE's skew handling should materialize (cache +
+      // count) its pairs before calling. The conf is restored in the
+      // finally; single-threaded session use is the assumption the
+      // bench/verify harnesses already make.
+      val spark = pairs.sparkSession
+      val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      try {
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        // LINEAGE TRUNCATION first (round-8, measured): every loop
+        // round's plan would otherwise embed the caller's whole
+        // pair-generation tree, and for a wide
+        // plan the DRIVER-side analysis/optimization of that tree per
+        // reference dwarfs the executed jobs (q_dedup_semantic's 14-level
+        // sketch plan spent ~33 s of a 37 s cluster call in planning;
+        // jobs totaled 4.6 s). localCheckpoint materializes the cached
+        // edge list into a LogicalRDD leaf in ONE pass, after which the
+        // rounds plan over a leaf-sized tree.
+        // Trade: a localCheckpoint does not survive executor loss (the
+        // query fails rather than recomputes) — the standard iterative-
+        // loop trade; the next call simply recomputes fresh.
+        val fwdT = fwd.localCheckpoint()
+        // gen is the HANDLE the final round's cache was registered under
+        // (the memo's validity must probe that exact plan — a projection
+        // of it reports StorageLevel.NONE), so the public column shape is
+        // derived from it
+        val (gen, rounds) = propagateLabels(fwdT, maxIters)
+        (gen.select(col("id").as("doc_id"), col("comp").as("canonical_doc"))
+          .orderBy(col("doc_id")), rounds, gen)
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
+        // fwd's cache is deliberately NOT unpersisted: a memo miss over
+        // the same pairs (another maxIters or column pair, or labels
+        // evicted while fwd survived) checkpoints from the in-memory pair
+        // list instead of re-materializing the caller's whole
+        // pair-generation plan. Same session-lifetime contract, same
+        // few-MB evictable cost, and same clearCache() guidance as
+        // [[minhashLsh]]'s shingle cache.
+        ()
+      }
     }
+    (res, rounds)
   }
 
   /** The propagation loop of [[clusterPairsRounds]] — runs on a memo
@@ -947,38 +921,32 @@ object Dedup {
     // handle memo + IMR-leaf (round-15): consumers (banding, the
     // ladder, chunk-bucket builders) re-analyzed the shingle+signature
     // tree per call
-    val key = s"simhashSigs:${ResultCache.sessionId(df.sparkSession)}:$idCol:$textCol:" +
-      s"$n:${ResultCache.planKey(df)}"
-    ResultCache.getOrComputeCachedLeaf(key)(
-      simhashSignaturesBuild(df, idCol, textCol, n))
+    ResultCache.memoLeaf("simhashSigs", df, idCol, textCol, n) {
+      // one per-row codegen'd pass (graft.plans.SimhashSignature): no
+      // shingle explode, no 64-column vote exchange — the signature is
+      // computed where the doc's shingle array already lives, packed
+      // into one long (bit j = plane j majority) so downstream hamming
+      // stays a codegen'd bit_count(a ^ b) on 16-byte rows. The md5
+      // plane family and the vote arithmetic are bit-identical to the
+      // old explode → md5/conv → 64-column vote groupBy (pinned in
+      // ExpressionSpec). The shingle-less-doc exclusion (< n tokens ⟺
+      // empty shingle set ⟺ no exploded rows in the old plan) is a
+      // CHEAP text-side pre-filter, deliberately NOT an isNotNull on
+      // the signature column: a filter on the computed column is pushed
+      // under the project by substitution and the signature (with the
+      // inlined shingle lambda) is then re-evaluated per use — measured
+      // 5.8 → 35.1 s at x10 (BASELINE.md round-8).
+      shingles(
+        spread(df.filter(size(split(col(textCol), " ")) >= n)),
+        idCol, textCol, n)
+        .select(col("doc_id"),
+          org.apache.spark.sql.GraftExpressionBridge.column(
+            graft.plans.SimhashSignature(
+              org.apache.spark.sql.GraftExpressionBridge.expression(col("shingles"))))
+            .as("sig"))
+        .cache()
+    }
   }
-
-  /** The un-memoized signature pass of [[simhashSignatures]]. */
-  private def simhashSignaturesBuild(df: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame =
-    // one per-row codegen'd pass (graft.plans.SimhashSignature): no
-    // shingle explode, no 64-column vote exchange — the signature is
-    // computed where the doc's shingle array already lives, packed
-    // into one long (bit j = plane j majority) so downstream hamming
-    // stays a codegen'd bit_count(a ^ b) on 16-byte rows. The md5
-    // plane family and the vote arithmetic are bit-identical to the
-    // old explode → md5/conv → 64-column vote groupBy (pinned in
-    // ExpressionSpec). The shingle-less-doc exclusion (< n tokens ⟺
-    // empty shingle set ⟺ no exploded rows in the old plan) is a
-    // CHEAP text-side pre-filter, deliberately NOT an isNotNull on
-    // the signature column: a filter on the computed column is pushed
-    // under the project by substitution and the signature (with the
-    // inlined shingle lambda) is then re-evaluated per use — measured
-    // 5.8 → 35.1 s at x10 (BASELINE.md round-8).
-    shingles(
-      spread(df.filter(size(split(col(textCol), " ")) >= n)),
-      idCol, textCol, n)
-      .select(col("doc_id"),
-        org.apache.spark.sql.GraftExpressionBridge.column(
-          graft.plans.SimhashSignature(
-            org.apache.spark.sql.GraftExpressionBridge.expression(col("shingles"))))
-          .as("sig"))
-      .cache()
 
   /** SimHash near-dup pairs: 64-bit majority-vote signature over shingle
     * hashes, chunk banding (pigeonhole: hamming ≤ chunks-1 guaranteed
@@ -1023,51 +991,45 @@ object Dedup {
   def simhash(df: DataFrame, idCol: String, textCol: String, n: Int = 3,
       maxHamming: Int = 3, maxChunkOccupancy: Int = 1024): DataFrame = {
     // handle memo + IMR-leaf — same round-15 rationale as [[minhashLsh]]
-    val key = s"simhashPairs:${ResultCache.sessionId(df.sparkSession)}:$idCol:$textCol:" +
-      s"$n:$maxHamming:$maxChunkOccupancy:${ResultCache.planKey(df)}"
-    ResultCache.getOrComputeCachedLeaf(key)(
-      simhashBuild(df, idCol, textCol, n, maxHamming, maxChunkOccupancy))
-  }
-
-  /** The un-memoized pipeline of [[simhash]]. */
-  private def simhashBuild(df: DataFrame, idCol: String, textCol: String,
-      n: Int, maxHamming: Int, maxChunkOccupancy: Int): DataFrame = {
-    val sigs = simhashSignatures(df, idCol, textCol, n)
-    // Candidate generation is one grouped aggregate over the chunk
-    // relation (the §18.22 shape — a chunk-key self-join pays its
-    // bucket exchange once per side because ReuseExchange does not
-    // fire across the a/b subtrees, plus a third for the occupancy
-    // cap). The doc LIST per chunk bucket carries (doc_id, sig)
-    // structs, so hamming is evaluated inline during in-bucket pair
-    // expansion — still no join-back of the signature relation — and
-    // the occupancy cap is a size() filter on the grouped row (same
-    // drop-over-cap semantics as the old capBuckets anti-join). The
-    // hamming filter runs inside the expansion, BEFORE the pair-dedup
-    // distinct, so the distinct exchange sees only matching pairs
-    // (duplicates arise per shared chunk; hamming is a function of
-    // the pair, so duplicates pass or fail together — filter-then-
-    // distinct is exact). Pairs compare doc-id VALUES (y > x), so the
-    // result is independent of collect_list's partition order.
-    // bounded list + true count — same memory contract as minhashLsh's
-    // candidate aggregate (see BoundedCollectList)
-    simhashChunkBuckets(sigs, maxHamming)
-      .groupBy(col("chunk_idx"), col("chunk_key"))
-      .agg(boundedList(struct(col("doc_id"), col("sig")), maxChunkOccupancy).as("ds"),
-        count(lit(1)).as("__occ"))
-      .filter(col("__occ") >= 2 && col("__occ") <= maxChunkOccupancy)
-      .select(explode(expr(
-        s"""flatten(transform(ds, x ->
-           |  transform(filter(ds, y -> y.doc_id > x.doc_id), y -> struct(
-           |    x.doc_id AS a_id, y.doc_id AS b_id,
-           |    bit_count(x.sig ^ y.sig) AS hamming))))""".stripMargin))
-        .as("p"))
-      .select(col("p.a_id"), col("p.b_id"), col("p.hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .orderBy(col("a_id"), col("b_id"))
-      // final pair relation cached — same steady-state rationale as
-      // [[jaccardPairs]]
-      .cache()
+    ResultCache.memoLeaf("simhashPairs", df, idCol, textCol, n, maxHamming,
+        maxChunkOccupancy) {
+      val sigs = simhashSignatures(df, idCol, textCol, n)
+      // Candidate generation is one grouped aggregate over the chunk
+      // relation (the §18.22 shape — a chunk-key self-join pays its
+      // bucket exchange once per side because ReuseExchange does not
+      // fire across the a/b subtrees, plus a third for the occupancy
+      // cap). The doc LIST per chunk bucket carries (doc_id, sig)
+      // structs, so hamming is evaluated inline during in-bucket pair
+      // expansion — still no join-back of the signature relation — and
+      // the occupancy cap is a size() filter on the grouped row (same
+      // drop-over-cap semantics as the old capBuckets anti-join). The
+      // hamming filter runs inside the expansion, BEFORE the pair-dedup
+      // distinct, so the distinct exchange sees only matching pairs
+      // (duplicates arise per shared chunk; hamming is a function of
+      // the pair, so duplicates pass or fail together — filter-then-
+      // distinct is exact). Pairs compare doc-id VALUES (y > x), so the
+      // result is independent of collect_list's partition order.
+      // bounded list + true count — same memory contract as minhashLsh's
+      // candidate aggregate (see BoundedCollectList)
+      simhashChunkBuckets(sigs, maxHamming)
+        .groupBy(col("chunk_idx"), col("chunk_key"))
+        .agg(boundedList(struct(col("doc_id"), col("sig")), maxChunkOccupancy).as("ds"),
+          count(lit(1)).as("__occ"))
+        .filter(col("__occ") >= 2 && col("__occ") <= maxChunkOccupancy)
+        .select(explode(expr(
+          s"""flatten(transform(ds, x ->
+             |  transform(filter(ds, y -> y.doc_id > x.doc_id), y -> struct(
+             |    x.doc_id AS a_id, y.doc_id AS b_id,
+             |    bit_count(x.sig ^ y.sig) AS hamming))))""".stripMargin))
+          .as("p"))
+        .select(col("p.a_id"), col("p.b_id"), col("p.hamming"))
+        .filter(col("hamming") <= maxHamming)
+        .distinct()
+        .orderBy(col("a_id"), col("b_id"))
+        // final pair relation cached — same steady-state rationale as
+        // [[jaccardPairs]]
+        .cache()
+    }
   }
 
   /** The UNCAPPED chunk-bucket relation (doc_id, sig, chunk_idx,
@@ -1180,7 +1142,6 @@ object Dedup {
       startLevelOverride: Int = -1): DataFrame = {
     require(maxHamming >= 1 && maxHamming <= 15,
       s"maxHamming must be in [1, 15], got $maxHamming")
-    val spark = sigs.sparkSession
     // MEMOIZED on planKey(sigs) + parameters (the clusterPairs
     // pattern): the build below runs driver-side jobs (reps count for
     // start-level sizing, per-level hot-bucket counts, the eager result
@@ -1195,134 +1156,127 @@ object Dedup {
     // (clusterPairs' edge cache + the reconstruction joins) otherwise
     // re-analyze the ladder's multi-level union tree on every call —
     // driver time, executors idle.
-    val key = s"simhashLadder:${ResultCache.sessionId(spark)}:$occT:" +
-      s"$finalCap:$maxHamming:$startLevelOverride:" +
-      ResultCache.planKey(sigs)
-    ResultCache.getOrComputeCachedLeaf(key)(
-      simhashPairsLadderBuild(sigs, occT, finalCap, maxHamming, startLevelOverride))
-  }
-
-  /** The un-memoized ladder build of [[simhashPairsFromSigs]]. */
-  private def simhashPairsLadderBuild(sigs: DataFrame, occT: Int,
-      finalCap: Int, maxHamming: Int, startLevelOverride: Int): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val parts = maxHamming + 1
-    val ephemeral = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = {
-      ephemeral += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df
-    }
-    // reps feeds the star branch and every frontier (re)generation —
-    // persisted so the groupBy over the (cached) signature relation
-    // runs once; the count below materializes it AND sizes the start
-    // level
-    val reps = keep(
-      sigs.groupBy(col("sig")).agg(min(col("doc_id")).as("doc_id")))
-    val nReps = reps.count()
-    val star = sigs
-      .join(reps.select(col("sig"), col("doc_id").as("a_id")), Seq("sig"))
-      .filter(col("doc_id") =!= col("a_id"))
-      .select(col("a_id"), col("doc_id").as("b_id"),
-        lit(0).cast("int").as("hamming"))
-    // driver-side mask ladder, parts masks per level: at the default
-    // h = 3 that is 4 × 16-bit, then per node 4 × 12-bit over its
-    // complement, then 4 × 9-bit — 84 literal masks total. Remainder
-    // bits (free.size mod parts) go one each to the leading masks.
-    def split(cum: Long, parts: Int): Seq[Long] = {
-      val free = (63 to 0 by -1).filter(b => (cum & (1L << b)) == 0L)
-      val base = free.size / parts
-      val rem = free.size % parts
-      val offs = (0 until parts).map(p => base * p + math.min(p, rem))
-      (0 until parts).map(p =>
-        free.slice(offs(p), offs(p) + base + (if (p < rem) 1 else 0))
-          .foldLeft(0L)((m, b) => m | (1L << b)))
-    }
-    var nextId = 0
-    def nid(): Int = { nextId += 1; nextId - 1 }
-    // nodes per level carry their CUMULATIVE mask (the bucket key is
-    // sig & cumMask); edges carry the child's own mask for descent
-    val l0 = split(0L, parts).map(m => (nid(), m))
-    val l1 = for ((p0, m0) <- l0; m1 <- split(m0, parts))
-      yield (p0, nid(), m0 | m1)
-    val l2 = for ((_, p1, c1) <- l1; m2 <- split(c1, parts))
-      yield (p1, nid(), c1 | m2)
-    val nodesAt: IndexedSeq[Seq[(Int, Long)]] = IndexedSeq(
-      l0, l1.map { case (_, id, cum) => (id, cum) },
-      l2.map { case (_, id, cum) => (id, cum) })
-    val edges = (l1 ++ l2).map { case (parent, id, cum) => (parent, id, cum) }
-    // child_cum is the child's cumulative mask: since parentKey =
-    // sig & parentCum and childCum ⊇ parentCum, the child key is just
-    // sig & childCum — no need to OR the parent key through the join
-    val childrenDf = edges.toDF("path", "child_path", "child_cum")
-    def frontierFrom(nodes: Seq[(Int, Long)]): DataFrame =
-      reps.select(col("doc_id"), col("sig"),
-          explode(array(nodes.map { case (p, m) =>
-            struct(lit(p).as("path"), lit(m).as("mask")) }: _*)).as("node"))
-        .select(col("doc_id"), col("sig"), col("node.path").as("path"),
-          col("sig").bitwiseAND(col("node.mask")).as("key"))
-    def expandDs(agged: DataFrame): DataFrame =
-      agged
-        .select(explode(expr(
-          """flatten(transform(ds, x ->
-            |  transform(filter(ds, y -> y.doc_id > x.doc_id), y -> struct(
-            |    x.doc_id AS a_id, y.doc_id AS b_id,
-            |    bit_count(x.sig ^ y.sig) AS hamming))))""".stripMargin)).as("p"))
-        .select(col("p.a_id"), col("p.b_id"), col("p.hamming"))
-        .filter(col("hamming") <= maxHamming)
-    val startLevel =
-      if (startLevelOverride >= 0) math.min(startLevelOverride, 2)
-      else (0 to 2).find { lvl =>
-        val minBits = nodesAt(lvl).map(n => java.lang.Long.bitCount(n._2)).min
-        nReps.toDouble / math.pow(2.0, math.min(minBits, 62).toDouble) <= occT
-      }.getOrElse(2)
-    var mkFrontier: () => DataFrame = () => frontierFrom(nodesAt(startLevel))
-    val levelPairs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var level = startLevel
-    var exhausted = false
-    while (level <= 2 && !exhausted) {
-      val cap = if (level == 2) finalCap else occT
-      // ONE shuffle: bounded member list + TRUE count per bucket; the
-      // occ = 1 mass dies inside the aggregation, only collision
-      // buckets are persisted (complete lists for occ ≤ cap — the only
-      // ones expand reads; hot buckets carry a truncated list that is
-      // never expanded, their membership comes from the re-scan below)
-      val agged = keep(mkFrontier()
-        .groupBy(col("path"), col("key"))
-        .agg(boundedList(struct(col("doc_id"), col("sig")), cap).as("ds"),
-          count(lit(1)).as("occ"))
-        .filter(col("occ") >= 2))
-      levelPairs += expandDs(agged.filter(col("occ") <= cap))
-      if (level < 2) {
-        val hot = agged.filter(col("occ") > cap)
-          .select(col("path"), col("key"))
-        // this count materializes agged's persist (so the expand leg
-        // reads the cache) and drives the early exit
-        val nHot = hot.count()
-        if (nHot == 0) exhausted = true
-        else {
-          // membership of hot buckets via frontier REGENERATION (a
-          // map-only explode over the cached reps) semi-joined with
-          // the hot key set — broadcast when it fits, shuffle join on
-          // adversarial input
-          val hotJ = if (nHot <= 2000000L) broadcast(hot) else hot
-          val gen = mkFrontier
-          mkFrontier = () => gen()
-            .join(hotJ, Seq("path", "key"))
-            .join(broadcast(childrenDf), "path")
-            .select(col("doc_id"), col("sig"),
-              col("child_path").as("path"),
-              col("sig").bitwiseAND(col("child_cum")).as("key"))
-        }
+    ResultCache.memoLeaf("simhashLadder", sigs, occT, finalCap, maxHamming,
+        startLevelOverride) {
+      val spark = sigs.sparkSession
+      import spark.implicits._
+      val parts = maxHamming + 1
+      val ephemeral = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      def keep(df: DataFrame): DataFrame = {
+        ephemeral += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        df
       }
-      level += 1
+      // reps feeds the star branch and every frontier (re)generation —
+      // persisted so the groupBy over the (cached) signature relation
+      // runs once; the count below materializes it AND sizes the start
+      // level
+      val reps = keep(
+        sigs.groupBy(col("sig")).agg(min(col("doc_id")).as("doc_id")))
+      val nReps = reps.count()
+      val star = sigs
+        .join(reps.select(col("sig"), col("doc_id").as("a_id")), Seq("sig"))
+        .filter(col("doc_id") =!= col("a_id"))
+        .select(col("a_id"), col("doc_id").as("b_id"),
+          lit(0).cast("int").as("hamming"))
+      // driver-side mask ladder, parts masks per level: at the default
+      // h = 3 that is 4 × 16-bit, then per node 4 × 12-bit over its
+      // complement, then 4 × 9-bit — 84 literal masks total. Remainder
+      // bits (free.size mod parts) go one each to the leading masks.
+      def split(cum: Long, parts: Int): Seq[Long] = {
+        val free = (63 to 0 by -1).filter(b => (cum & (1L << b)) == 0L)
+        val base = free.size / parts
+        val rem = free.size % parts
+        val offs = (0 until parts).map(p => base * p + math.min(p, rem))
+        (0 until parts).map(p =>
+          free.slice(offs(p), offs(p) + base + (if (p < rem) 1 else 0))
+            .foldLeft(0L)((m, b) => m | (1L << b)))
+      }
+      var nextId = 0
+      def nid(): Int = { nextId += 1; nextId - 1 }
+      // nodes per level carry their CUMULATIVE mask (the bucket key is
+      // sig & cumMask); edges carry the child's own mask for descent
+      val l0 = split(0L, parts).map(m => (nid(), m))
+      val l1 = for ((p0, m0) <- l0; m1 <- split(m0, parts))
+        yield (p0, nid(), m0 | m1)
+      val l2 = for ((_, p1, c1) <- l1; m2 <- split(c1, parts))
+        yield (p1, nid(), c1 | m2)
+      val nodesAt: IndexedSeq[Seq[(Int, Long)]] = IndexedSeq(
+        l0, l1.map { case (_, id, cum) => (id, cum) },
+        l2.map { case (_, id, cum) => (id, cum) })
+      val edges = (l1 ++ l2).map { case (parent, id, cum) => (parent, id, cum) }
+      // child_cum is the child's cumulative mask: since parentKey =
+      // sig & parentCum and childCum ⊇ parentCum, the child key is just
+      // sig & childCum — no need to OR the parent key through the join
+      val childrenDf = edges.toDF("path", "child_path", "child_cum")
+      def frontierFrom(nodes: Seq[(Int, Long)]): DataFrame =
+        reps.select(col("doc_id"), col("sig"),
+            explode(array(nodes.map { case (p, m) =>
+              struct(lit(p).as("path"), lit(m).as("mask")) }: _*)).as("node"))
+          .select(col("doc_id"), col("sig"), col("node.path").as("path"),
+            col("sig").bitwiseAND(col("node.mask")).as("key"))
+      def expandDs(agged: DataFrame): DataFrame =
+        agged
+          .select(explode(expr(
+            """flatten(transform(ds, x ->
+              |  transform(filter(ds, y -> y.doc_id > x.doc_id), y -> struct(
+              |    x.doc_id AS a_id, y.doc_id AS b_id,
+              |    bit_count(x.sig ^ y.sig) AS hamming))))""".stripMargin)).as("p"))
+          .select(col("p.a_id"), col("p.b_id"), col("p.hamming"))
+          .filter(col("hamming") <= maxHamming)
+      val startLevel =
+        if (startLevelOverride >= 0) math.min(startLevelOverride, 2)
+        else (0 to 2).find { lvl =>
+          val minBits = nodesAt(lvl).map(n => java.lang.Long.bitCount(n._2)).min
+          nReps.toDouble / math.pow(2.0, math.min(minBits, 62).toDouble) <= occT
+        }.getOrElse(2)
+      var mkFrontier: () => DataFrame = () => frontierFrom(nodesAt(startLevel))
+      val levelPairs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var level = startLevel
+      var exhausted = false
+      while (level <= 2 && !exhausted) {
+        val cap = if (level == 2) finalCap else occT
+        // ONE shuffle: bounded member list + TRUE count per bucket; the
+        // occ = 1 mass dies inside the aggregation, only collision
+        // buckets are persisted (complete lists for occ ≤ cap — the only
+        // ones expand reads; hot buckets carry a truncated list that is
+        // never expanded, their membership comes from the re-scan below)
+        val agged = keep(mkFrontier()
+          .groupBy(col("path"), col("key"))
+          .agg(boundedList(struct(col("doc_id"), col("sig")), cap).as("ds"),
+            count(lit(1)).as("occ"))
+          .filter(col("occ") >= 2))
+        levelPairs += expandDs(agged.filter(col("occ") <= cap))
+        if (level < 2) {
+          val hot = agged.filter(col("occ") > cap)
+            .select(col("path"), col("key"))
+          // this count materializes agged's persist (so the expand leg
+          // reads the cache) and drives the early exit
+          val nHot = hot.count()
+          if (nHot == 0) exhausted = true
+          else {
+            // membership of hot buckets via frontier REGENERATION (a
+            // map-only explode over the cached reps) semi-joined with
+            // the hot key set — broadcast when it fits, shuffle join on
+            // adversarial input
+            val hotJ = if (nHot <= 2000000L) broadcast(hot) else hot
+            val gen = mkFrontier
+            mkFrontier = () => gen()
+              .join(hotJ, Seq("path", "key"))
+              .join(broadcast(childrenDf), "path")
+              .select(col("doc_id"), col("sig"),
+                col("child_path").as("path"),
+                col("sig").bitwiseAND(col("child_cum")).as("key"))
+          }
+        }
+        level += 1
+      }
+      val result =
+        star.unionByName(levelPairs.reduce(_ unionByName _).distinct()).cache()
+      try {
+        result.count() // materialize while the intermediates are live
+        result
+      } finally ephemeral.foreach(_.unpersist(false))
     }
-    val result =
-      star.unionByName(levelPairs.reduce(_ unionByName _).distinct()).cache()
-    try {
-      result.count() // materialize while the intermediates are live
-      result
-    } finally ephemeral.foreach(_.unpersist(false))
   }
 
   private[graft] def simhashChunkBuckets(sigs: DataFrame, maxHamming: Int): DataFrame = {

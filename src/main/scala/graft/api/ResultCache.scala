@@ -31,17 +31,25 @@ import org.apache.spark.storage.StorageLevel
   * the operator was given, which is invariant across invocations.
   *
   * Contract:
-  *   - `key` must determine the result: equal keys ⇒ equal results.
-  *     Every caller builds its key from an operator tag, the session
-  *     id, every parameter that affects the output, and [[planKey]]
-  *     of its input — no other input identity (paths, caller-chosen
-  *     strings, content scans) is used anywhere. The exception is on
-  *     purpose: entries whose artifact lives on disk or in the shared
-  *     catalog — the derived copies of `ops.Relational`, the bucketed
-  *     tables of `sources.Bucketed`, the events ts sniff of `Tables` —
-  *     omit the session id, because any session of the JVM may reuse
-  *     the artifact; they add the artifact's path or table name, so a
-  *     moved copy root or a renamed table misses.
+  *   - Callers never build a key. They name an operator tag, the input
+  *     DataFrame and every parameter that affects the output, through
+  *     one of three calls:
+  *       - [[memo]] for a session entry: the key adds the session id
+  *         of the input and [[planKey]] of the input;
+  *       - [[memoLeaf]], the same entry for a cached relation, handed
+  *         out as its IMR leaf;
+  *       - [[shared]] for an entry whose artifact lives on disk or in
+  *         the shared catalog (the derived copies of `ops.Relational`,
+  *         the bucketed tables of `sources.Bucketed`): the key adds the
+  *         artifact's path or table name instead of the session id,
+  *         because any session of the JVM may reuse the artifact, and
+  *         a moved copy root or a renamed table misses.
+  *     Equal keys must mean equal results, so a parameter the caller
+  *     leaves out is a parameter the result may not depend on. No other
+  *     input identity (paths of the input, caller-chosen strings,
+  *     content scans) enters a key. The one entry outside the three
+  *     calls is the events ts sniff of `Tables`, which has no input
+  *     plan and keys on the events path and its mtime.
   *   - This memo is the only state the library keeps across calls: no
   *     other object-level map or set (MemoKeySpec pins it).
   *   - Refresh: [[planKey]] covers the input's file listing, so a
@@ -67,20 +75,58 @@ import org.apache.spark.storage.StorageLevel
   */
 object ResultCache {
 
-  private val memo = new ConcurrentHashMap[String, Any]()
+  /** The memo key: `scope` is the session id of a session entry or the
+    * artifact of a shared one, `params` the caller's parameters as
+    * rendered strings, `input` the [[planKey]] of the input. */
+  private final case class Key(tag: String, scope: String, params: Seq[String], input: String)
 
-  /** Memoized compute: returns the stored value for `key` when present
-    * and `stillValid`; otherwise computes, stores, and returns. A null
-    * compute result is returned but NOT memoized (ConcurrentHashMap
-    * cannot hold null, and a null model — e.g. a bloom aggregate over
-    * zero rows — is cheap to recompute and usually signals an
-    * empty-input fast path the caller handles itself). */
-  def getOrCompute[T](key: String, stillValid: T => Boolean)(compute: => T): T = {
-    memo.get(key) match {
+  private val entries = new ConcurrentHashMap[Any, Any]()
+
+  /** Memoized compute of a session entry keyed by `tag`, the session of
+    * `input`, `params` and [[planKey]] of `input`; see [[getOrCompute]]
+    * for `stillValid` and null results. */
+  def memo[T](tag: String, input: DataFrame, params: Any*)(stillValid: T => Boolean)(
+      compute: => T): T =
+    getOrCompute(
+      Key(tag, sessionId(input.sparkSession), params.map(p => s"$p"), planKey(input)),
+      stillValid)(compute)
+
+  /** [[memo]] for a memoized CACHED relation, returning the IMR-LEAF
+    * handle ([[org.apache.spark.sql.GraftExpressionBridge.cachedLeaf]])
+    * so consumer stacks analyze a one-node plan instead of the full
+    * producer tree (guide §3.3 / §7.3 — plan size is driver time; the
+    * sketch family paid 0.5-1 s per warm query re-analyzing its 15-join
+    * bucket tree). Validity probes the ORIGINAL handle — the leaf plan
+    * is not registered with the CacheManager, so probing it would read
+    * NONE and defeat the memo. `compute` must return an already
+    * `.cache()`d DataFrame (registration is what cachedLeaf looks up;
+    * materialization may still be lazy). */
+  def memoLeaf(tag: String, input: DataFrame, params: Any*)(compute: => DataFrame): DataFrame =
+    memo[(DataFrame, DataFrame)](tag, input, params: _*)(p => isCached(p._1)) {
+      val orig = compute
+      (orig, org.apache.spark.sql.GraftExpressionBridge.cachedLeaf(orig))
+    }._2
+
+  /** Memoized compute of an entry shared by every session of the JVM,
+    * keyed by `tag`, the `artifact` it stands for (the path of an
+    * on-disk copy or the name of a catalog table) and [[planKey]] of
+    * the `input` the artifact was derived from. */
+  def shared[T](tag: String, artifact: String, input: DataFrame)(stillValid: T => Boolean)(
+      compute: => T): T =
+    getOrCompute(Key(tag, artifact, Nil, planKey(input)), stillValid)(compute)
+
+  /** Returns the stored value for `key` when present and `stillValid`;
+    * otherwise computes, stores, and returns. A null compute result is
+    * returned but NOT memoized (ConcurrentHashMap cannot hold null, and
+    * a null model — e.g. a bloom aggregate over zero rows — is cheap to
+    * recompute and usually signals an empty-input fast path the caller
+    * handles itself). `key` needs value equality. */
+  private[graft] def getOrCompute[T](key: Any, stillValid: T => Boolean)(compute: => T): T = {
+    entries.get(key) match {
       case v if v != null && stillValid(v.asInstanceOf[T]) => v.asInstanceOf[T]
       case _ =>
         val fresh = compute
-        if (fresh != null) memo.put(key, fresh)
+        if (fresh != null) entries.put(key, fresh)
         fresh
     }
   }
@@ -88,7 +134,7 @@ object ResultCache {
   /** Drop every memo entry (handles only — the underlying Spark storage
     * is governed by `spark.catalog.clearCache()`). For tests that need
     * a guaranteed-cold path and batch boundaries in long sessions. */
-  def clear(): Unit = memo.clear()
+  def clear(): Unit = entries.clear()
 
   /** Stable unique id of a session, for memo keys that bind a cached
     * HANDLE to the session that built it. identityHashCode is NOT that:
@@ -98,7 +144,7 @@ object ResultCache {
     * UUID; any other implementation falls back to identity (with the
     * documented reuse caveat — non-classic sessions don't share this
     * JVM-local memo's artifacts anyway). */
-  def sessionId(spark: org.apache.spark.sql.SparkSession): String = spark match {
+  private[graft] def sessionId(spark: org.apache.spark.sql.SparkSession): String = spark match {
     case c: org.apache.spark.sql.classic.SparkSession =>
       org.apache.spark.sql.GraftExpressionBridge.sessionUUID(c)
     case s => s"idhash-${System.identityHashCode(s)}"
@@ -111,22 +157,6 @@ object ResultCache {
     * lineage is the full unrolled loop. */
   def isCached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
 
-  /** [[getOrCompute]] for memoized CACHED relations, returning the
-    * IMR-LEAF handle ([[org.apache.spark.sql.GraftExpressionBridge.cachedLeaf]])
-    * so consumer stacks analyze a one-node plan instead of the full
-    * producer tree (guide §3.3 / §7.3 — plan size is driver time; the
-    * sketch family paid 0.5-1 s per warm query re-analyzing its 15-join
-    * bucket tree). Validity probes the ORIGINAL handle — the leaf plan
-    * is not registered with the CacheManager, so probing it would read
-    * NONE and defeat the memo. `compute` must return an already
-    * `.cache()`d DataFrame (registration is what cachedLeaf looks up;
-    * materialization may still be lazy). */
-  def getOrComputeCachedLeaf(key: String)(compute: => DataFrame): DataFrame =
-    getOrCompute[(DataFrame, DataFrame)](key, p => isCached(p._1)) {
-      val orig = compute
-      (orig, org.apache.spark.sql.GraftExpressionBridge.cachedLeaf(orig))
-    }._2
-
   /** The one memo key of the library: a function of the INPUT PLAN
     * and of the FILES it reads, stable across calls, cache
     * materialization and `clearCache()` rebuilds. Zero jobs.
@@ -134,7 +164,7 @@ object ResultCache {
     * The analyzed plan is canonicalized (exprIds and names erased, so
     * semantically equal plans key identically) after two rewrites:
     *   - every InMemoryRelation leaf (a memoized handle, see
-    *     [[getOrComputeCachedLeaf]]) is replaced by the key of the
+    *     [[memoLeaf]]) is replaced by the key of the
     *     logical plan it caches. The leaf itself renders its PHYSICAL
     *     cached plan, which changes when the cache materializes (AQE's
     *     `isFinalPlan=false` → `true`) and on every rebuild, so a key
@@ -164,7 +194,7 @@ object ResultCache {
     * hashes (ParquetFileFormat's `hashCode` is its class's identity
     * hash), so two processes reading the same files get different keys.
     * Key memos with it; never name files or tables with it. */
-  def planKey(df: DataFrame): String = keyOf(df.queryExecution.analyzed)
+  private[graft] def planKey(df: DataFrame): String = keyOf(df.queryExecution.analyzed)
 
   private def keyOf(plan: LogicalPlan): String = {
     val stable = plan.transformUpWithSubqueries {

@@ -117,8 +117,9 @@ object Similarity {
 
   /** Deterministic sign-LSH bucket assignment with one level of
     * occupancy-bounded refinement — the scale-safe block key for
-    * [[allPairs]]/[[nearDupCanonical]] (a `label`-style attribute block
-    * caps at O((n/|labels|)²) per block and dies at 100 TB).
+    * [[allPairsSketch]]/[[nearDupCanonicalSketch]] (a `label`-style
+    * attribute block caps at O((n/|labels|)²) per block and dies at
+    * 100 TB).
     *
     * Bucket bit j is the SIGN of raw coordinate j — an axis-aligned
     * member of the random-hyperplane LSH family (planes = standard basis
@@ -400,7 +401,7 @@ object Similarity {
     * query invocations in the same session. The cache is also what keeps
     * the job count flat: un-cached, the broadcast-count subplan inside
     * [[signLshBuckets]] re-executes as a separate job for every use of
-    * the relation (3 uses in nearDupCanonical ⇒ 8 jobs measured at
+    * the relation (3 uses in nearDupCanonicalOn ⇒ 8 jobs measured at
     * sf0.1); cached it runs once (5 jobs). On a contended machine each
     * job is a fixed-latency driver round-trip, so jobs ≈ cost. */
   private def sketchEmb(df: DataFrame, idCol: String, vecCol: String,
@@ -415,13 +416,12 @@ object Similarity {
     // clearCache() forces a fresh build exactly like the clusterPairs
     // memo. A miss races at worst into two identical plan-matching
     // cache() registrations — harmless (CacheManager dedups).
-    val key = s"sketchEmb:${ResultCache.sessionId(df.sparkSession)}:$idCol:$vecCol:" +
-      s"$nBits:$extraBits:$maxOccupancy:$levels:${ResultCache.planKey(df)}"
     // IMR-leaf handle (round-15): consumers (pair join + agg + sort ×
     // 6 sketch-family queries) re-analyzed the full 15-join bucket tree
     // on every call — 0.5-1 s of driver time per warm query with the
     // executors idle; over the leaf they analyze one node
-    ResultCache.getOrComputeCachedLeaf(key)(
+    ResultCache.memoLeaf("sketchEmb", df, idCol, vecCol, nBits, extraBits, maxOccupancy,
+        levels)(
       normalized(signLshBuckets(df, idCol, vecCol, nBits, extraBits, maxOccupancy, levels),
         idCol, vecCol, keep = Seq("bucket")).cache())
   }
@@ -436,25 +436,18 @@ object Similarity {
     allPairsOn(sketchEmb(df, idCol, vecCol, nBits, extraBits, maxOccupancy, levels),
       "bucket", threshold)
 
-  /** Near-dup canonicalization under sign-LSH blocking — [[nearDupCanonical]]
-    * with the [[signLshBuckets]] key instead of an attribute block. */
+  /** Near-dup canonicalization under sign-LSH blocking:
+    * [[nearDupCanonicalOn]] over the [[signLshBuckets]] key. */
   def nearDupCanonicalSketch(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nBits: Int = 6, extraBits: Int = 4,
       maxOccupancy: Int = 32, levels: Int = 1): DataFrame =
     nearDupCanonicalOn(sketchEmb(df, idCol, vecCol, nBits, extraBits, maxOccupancy, levels),
       "bucket", threshold)
 
-  /** All pairs ≥ threshold within blocks: equi join on the block key —
-    * O(block²) work per block, never a global cross product. The block
-    * key is the scale knob: an attribute (label) for small corpora, the
-    * [[signLshBuckets]] sketch bucket or an IVF cell at scale. */
-  def allPairs(df: DataFrame, idCol: String, vecCol: String,
-      blockCol: String, threshold: Double): DataFrame =
-    allPairsOn(normalized(df, idCol, vecCol, keep = Seq(blockCol)), blockCol, threshold)
-
-  /** [[allPairs]] over an already-normalized (vec_id, nemb, blockCol)
-    * relation — split out so the Sketch variants can pass the shared
-    * cached relation instead of re-normalizing. */
+  /** All pairs ≥ threshold within blocks of an already-normalized
+    * (vec_id, nemb, blockCol) relation: equi join on the block key —
+    * O(block²) work per block, never a global cross product. The Sketch
+    * variants pass the shared cached [[sketchEmb]] relation. */
   private def allPairsOn(emb: DataFrame, blockCol: String, threshold: Double): DataFrame = {
     emb.as("a")
       .join(emb.as("b"),
@@ -567,9 +560,7 @@ object Similarity {
     // cached" CacheManager warnings); one memoized MEMORY_ONLY entry
     // (the storage-level rationale of the old per-call persist is in
     // [[ivfCandidates]]'s scaladoc) serves the whole IVF family
-    val key = s"quantEmb:${ResultCache.sessionId(df.sparkSession)}:$idCol:$vecCol:" +
-      ResultCache.planKey(df)
-    ResultCache.getOrComputeCachedLeaf(key)(
+    ResultCache.memoLeaf("quantEmb", df, idCol, vecCol)(
       normalized(df, idCol, vecCol)
         .withColumn("iq",
           org.apache.spark.sql.GraftExpressionBridge.column(
@@ -598,9 +589,7 @@ object Similarity {
     * the same corpus runs no fit job. */
   private def ivfFitInt(qemb: DataFrame, nCells: Int,
       iters: Int): IndexedSeq[Array[Double]] = {
-    val key = s"ivfFitInt:${ResultCache.sessionId(qemb.sparkSession)}:" +
-      s"$nCells:$iters:${ResultCache.planKey(qemb)}"
-    ResultCache.getOrCompute[IndexedSeq[Array[Double]]](key, _ => true) {
+    ResultCache.memo[IndexedSeq[Array[Double]]]("ivfFitInt", qemb, nCells, iters)(_ => true) {
       var cents: IndexedSeq[Array[Double]] = qemb
         .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
         .limit(nCells)
@@ -785,58 +774,46 @@ object Similarity {
       iters: Int): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
     // plan-keyed model memo (round-15, the ivfFitInt treatment): the
     // bounded-sample collect + driver Lloyd loop re-ran on every call
-    val key = s"pqFitInt:${ResultCache.sessionId(qemb.sparkSession)}:" +
-      s"$m:$k:$iters:${ResultCache.planKey(qemb)}"
-    ResultCache.getOrCompute[IndexedSeq[IndexedSeq[IndexedSeq[Double]]]](
-      key, _ => true)(pqFitIntBuild(qemb, m, k, iters))
-  }
-
-  /** The un-memoized sample + Lloyd loop of [[pqFitInt]]. */
-  private def pqFitIntBuild(qemb: DataFrame, m: Int, k: Int,
-      iters: Int): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
-    val sample = qemb
-      .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
-      .limit(64 * k)
-      .select(col("iq")).collect().map(_.getSeq[Double](0).toIndexedSeq)
-    require(sample.nonEmpty, "pqFitInt: input DataFrame has no rows")
-    val dim = sample.head.length
-    require(dim % m == 0, s"pqFitInt: dim=$dim not divisible by m=$m")
-    val sub = dim / m
-    def l2(a: Seq[Double], b: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }; s
-    }
-    val stride = math.max(1, sample.length / k)
-    (0 until m).map { mi =>
-      val pts = sample.map(v => v.slice(mi * sub, (mi + 1) * sub))
-      var cents: IndexedSeq[IndexedSeq[Double]] =
-        (0 until k).map(_ * stride).filter(_ < pts.length).map(pts)
-      for (_ <- 1 to iters) {
-        val byCell = pts.groupBy(p =>
-          cents.indices.minBy(c => (l2(p, cents(c)), c)))
-        cents = cents.indices.map { c =>
-          byCell.get(c) match {
-            case Some(ps) =>
-              (0 until sub).map(j =>
-                math.floor(ps.map(_(j)).sum / ps.length)).toIndexedSeq
-            case None => cents(c)
+    ResultCache.memo[IndexedSeq[IndexedSeq[IndexedSeq[Double]]]](
+        "pqFitInt", qemb, m, k, iters)(_ => true) {
+      val sample = qemb
+        .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
+        .limit(64 * k)
+        .select(col("iq")).collect().map(_.getSeq[Double](0).toIndexedSeq)
+      require(sample.nonEmpty, "pqFitInt: input DataFrame has no rows")
+      val dim = sample.head.length
+      require(dim % m == 0, s"pqFitInt: dim=$dim not divisible by m=$m")
+      val sub = dim / m
+      def l2(a: Seq[Double], b: Seq[Double]): Double = {
+        var s = 0.0; var i = 0
+        while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }; s
+      }
+      val stride = math.max(1, sample.length / k)
+      (0 until m).map { mi =>
+        val pts = sample.map(v => v.slice(mi * sub, (mi + 1) * sub))
+        var cents: IndexedSeq[IndexedSeq[Double]] =
+          (0 until k).map(_ * stride).filter(_ < pts.length).map(pts)
+        for (_ <- 1 to iters) {
+          val byCell = pts.groupBy(p =>
+            cents.indices.minBy(c => (l2(p, cents(c)), c)))
+          cents = cents.indices.map { c =>
+            byCell.get(c) match {
+              case Some(ps) =>
+                (0 until sub).map(j =>
+                  math.floor(ps.map(_(j)).sum / ps.length)).toIndexedSeq
+              case None => cents(c)
+            }
           }
         }
+        cents
       }
-      cents
     }
   }
 
-  /** Cosine near-dup canonicalization: each vector collapses to the min
-    * id of its ≥-threshold neighborhood within a block (single-pass, no
+  /** Cosine near-dup canonicalization over an already-normalized
+    * relation, like [[allPairsOn]]: each vector collapses to the min id
+    * of its ≥-threshold neighborhood within a block (single-pass, no
     * transitive closure). */
-  def nearDupCanonical(df: DataFrame, idCol: String, vecCol: String,
-      blockCol: String, threshold: Double): DataFrame =
-    nearDupCanonicalOn(normalized(df, idCol, vecCol, keep = Seq(blockCol)),
-      blockCol, threshold)
-
-  /** [[nearDupCanonical]] over an already-normalized relation — the
-    * shared-cache seam, like [[allPairsOn]]. */
   private def nearDupCanonicalOn(emb: DataFrame, blockCol: String,
       threshold: Double): DataFrame = {
     val pairs = emb.as("a")

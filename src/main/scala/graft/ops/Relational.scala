@@ -90,15 +90,16 @@ object Relational {
     * [[graft.api.ResultCache.planKey]], which is per-JVM, so two
     * processes would each write their own copy.
     *
-    * Reuse is one [[graft.api.ResultCache]] entry keyed by the dest and
-    * `planKey(src)`: an in-place refresh of the source changes its file
-    * listing, so the next call misses and re-validates. Validation
-    * compares the copy's [[fingerprint]] (read back through `read`,
-    * projected to `src`'s columns) with the source's, and a mismatch
-    * rewrites the copy; a hit costs nothing beyond the key. The entry
-    * stays valid while the `_SUCCESS` it validated is the one on disk,
-    * so a copy rewritten for another source (same sanitized name) or by
-    * another process is validated again.
+    * Reuse is one [[graft.api.ResultCache.shared]] entry keyed by the
+    * dest and the source read: an in-place refresh of the source
+    * changes its file listing, so the next call misses and
+    * re-validates. Validation compares the copy's [[fingerprint]]
+    * (read back through `read`, projected to `src`'s columns) with the
+    * source's, and a mismatch rewrites the copy; a hit costs nothing
+    * beyond the key. The entry stays valid while the `_SUCCESS` it
+    * validated is the one on disk, so a copy rewritten for another
+    * source (same sanitized name) or by another process is validated
+    * again.
     *
     * Concurrency: the copy is PUBLISHED ATOMICALLY via
     * [[publishValidated]] — a second JVM racing this one can never read
@@ -111,9 +112,8 @@ object Relational {
     val cacheRoot = fixtureCacheRoot
     val dest = new java.io.File(cacheRoot, tag + "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_"))
     def marker = new java.io.File(dest, "_SUCCESS").lastModified
-    graft.api.ResultCache.getOrCompute[(String, Long)](
-      s"derived-copy|$tag|${dest.getAbsolutePath}|${graft.api.ResultCache.planKey(src)}",
-      v => v._2 != 0L && marker == v._2) {
+    graft.api.ResultCache.shared[(String, Long)](
+        s"derived-copy-$tag", dest.getAbsolutePath, src)(v => v._2 != 0L && marker == v._2) {
       val srcFp = fingerprint(src)
       def validAt(at: java.io.File) = new java.io.File(at, "_SUCCESS").exists() &&
         (try fingerprint(read(at.toString).select(src.columns.map(col).toSeq: _*)) == srcFp

@@ -529,15 +529,9 @@ object Text {
     * replay generator so the two can never drift. */
   private[graft] val BpeMergeCount = 12
 
-  /** Memo key of a per-corpus relation or value: operator tag +
-    * session + [[api.ResultCache.planKey]] of the documents. */
-  private def corpusKey(tag: String, docs: DataFrame): String =
-    s"$tag:${api.ResultCache.sessionId(docs.sparkSession)}:${api.ResultCache.planKey(docs)}"
-
   private def bpeMergesFor(spark: SparkSession, dir: String): Seq[api.Bpe.Merge] = {
     val docs = Tables.documents(spark, dir)
-    api.ResultCache.getOrCompute[Seq[api.Bpe.Merge]](
-      corpusKey(s"bpe$BpeMergeCount", docs), _ => true)(
+    api.ResultCache.memo[Seq[api.Bpe.Merge]]("bpe", docs, BpeMergeCount)(_ => true)(
       bpeTrain(bpeWords(docs), BpeMergeCount)._1)
   }
 
@@ -994,35 +988,30 @@ object Text {
     // vocab feeds every dictionary-encode consumer (tfidf, unigram/
     // bigram models, pmi decode) — each rebuilt + re-analyzed this
     // window-over-bucket tree per call
-    api.ResultCache.getOrComputeCachedLeaf(corpusKey("tokenVocab", docs))(
-      tokenVocabBuild(docs))
-  }
-
-  /** The un-memoized vocabulary build of [[tokenVocab]]. */
-  private def tokenVocabBuild(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    val toksRel = api.Dedup.spread(docs)
-      .select(explode(toks($"text")).as("w"))
-      .distinct()
-      .withColumn("bkt", pmod(xxhash64($"w"), lit(4096L)))
-    val offsets = toksRel.groupBy($"bkt").agg(count(lit(1)).as("cnt"))
-      .withColumn("offset",
-        coalesce(sum($"cnt").over(Window.orderBy($"bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"bkt", $"offset")
-    toksRel.join(broadcast(offsets), Seq("bkt"))
-      .withColumn("wid", $"offset" + row_number().over(
-        Window.partitionBy($"bkt").orderBy($"w")) - 1)
-      .select($"w", $"wid")
-      .cache()
+    api.ResultCache.memoLeaf("tokenVocab", docs) {
+      import docs.sparkSession.implicits._
+      val toksRel = api.Dedup.spread(docs)
+        .select(explode(toks($"text")).as("w"))
+        .distinct()
+        .withColumn("bkt", pmod(xxhash64($"w"), lit(4096L)))
+      val offsets = toksRel.groupBy($"bkt").agg(count(lit(1)).as("cnt"))
+        .withColumn("offset",
+          coalesce(sum($"cnt").over(Window.orderBy($"bkt")
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select($"bkt", $"offset")
+      toksRel.join(broadcast(offsets), Seq("bkt"))
+        .withColumn("wid", $"offset" + row_number().over(
+          Window.partitionBy($"bkt").orderBy($"w")) - 1)
+        .select($"w", $"wid")
+        .cache()
+    }
   }
 
   /** The corpus vocabulary size, memoized per (session, corpus): every
     * tokenization of `docs` the token-scoring queries use yields the
     * same vocabulary, so they share one sizing count. */
   private def vocabCount(docs: DataFrame)(count: => Long): Long =
-    api.ResultCache.getOrCompute[java.lang.Long](
-      corpusKey("vocabCount", docs), _ => true)(count)
+    api.ResultCache.memo[java.lang.Long]("vocabCount", docs)(_ => true)(count)
 
   /** The vocabulary with its memoized size (the broadcast-gate count,
     * shared with textTfidf/textUnigramLL's identical-vocabulary memo). */
@@ -1057,33 +1046,29 @@ object Text {
     // handle memo + IMR-leaf (round-15): rebuilt per call by pmi AND
     // the bigram-ll family; the persist already plan-matched, the
     // rebuild + re-analysis did not
-    api.ResultCache.getOrComputeCachedLeaf(corpusKey("bigramRunsEnc", docs))(
-      bigramRunsEncBuild(docs))
-  }
-
-  /** The un-memoized encode of [[bigramRunsEnc]]. */
-  private def bigramRunsEncBuild(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    val (vocab, nVocab) = vocabWithCount(docs)
-    def vocabB(wAs: String, idAs: String) = {
-      val r = vocab.select($"w".as(wAs), $"wid".as(idAs))
-      if (nVocab <= 2000000L) broadcast(r) else r
+    api.ResultCache.memoLeaf("bigramRunsEnc", docs) {
+      import docs.sparkSession.implicits._
+      val (vocab, nVocab) = vocabWithCount(docs)
+      def vocabB(wAs: String, idAs: String) = {
+        val r = vocab.select($"w".as(wAs), $"wid".as(idAs))
+        if (nVocab <= 2000000L) broadcast(r) else r
+      }
+      api.Dedup.spread(docs)
+        .select($"doc_id",
+          explode(org.apache.spark.sql.GraftExpressionBridge.column(
+            graft.plans.NgramRunLengths(
+              org.apache.spark.sql.GraftExpressionBridge.expression($"text"), 2))).as("e"))
+        .select($"doc_id", $"e.token".as("bg"), $"e.tf".as("rtf"))
+        // tokens are space-split, so w1 never contains a space and the
+        // two substring_index calls recover the exact pair — including
+        // empty tokens from leading/multiple spaces
+        .withColumn("w1", substring_index($"bg", " ", 1))
+        .withColumn("w2", substring_index($"bg", " ", -1))
+        .join(vocabB("w1", "id1"), "w1")
+        .join(vocabB("w2", "id2"), "w2")
+        .select($"doc_id", shiftleft($"id1", 32).bitwiseOR($"id2").as("bid"), $"rtf")
+        .transform(graft.api.Persists.diskOnly)
     }
-    api.Dedup.spread(docs)
-      .select($"doc_id",
-        explode(org.apache.spark.sql.GraftExpressionBridge.column(
-          graft.plans.NgramRunLengths(
-            org.apache.spark.sql.GraftExpressionBridge.expression($"text"), 2))).as("e"))
-      .select($"doc_id", $"e.token".as("bg"), $"e.tf".as("rtf"))
-      // tokens are space-split, so w1 never contains a space and the
-      // two substring_index calls recover the exact pair — including
-      // empty tokens from leading/multiple spaces
-      .withColumn("w1", substring_index($"bg", " ", 1))
-      .withColumn("w2", substring_index($"bg", " ", -1))
-      .join(vocabB("w1", "id1"), "w1")
-      .join(vocabB("w2", "id2"), "w2")
-      .select($"doc_id", shiftleft($"id1", 32).bitwiseOR($"id2").as("bid"), $"rtf")
-      .transform(graft.api.Persists.diskOnly)
   }
 
   /** Corpus bigram model c(w1 w2), keyed by the PACKED bigram id —
@@ -1096,7 +1081,7 @@ object Text {
   private def bigramModelEnc(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     // handle memo + IMR-leaf (round-15) — see [[bigramRunsEnc]]
-    api.ResultCache.getOrComputeCachedLeaf(corpusKey("bigramModelEnc", docs))(
+    api.ResultCache.memoLeaf("bigramModelEnc", docs)(
       bigramRunsEnc(docs)
         .groupBy($"bid").agg(sum($"rtf").as("cbg"))
         .transform(graft.api.Persists.diskOnly))
@@ -1108,8 +1093,8 @@ object Text {
     import docs.sparkSession.implicits._
     val bg = bigramRunsEnc(docs)
     val model = bigramModelEnc(docs)
-    val nBigrams: Long = api.ResultCache.getOrCompute[java.lang.Long](
-      corpusKey("bigramCount", docs), _ => true)(model.count())
+    val nBigrams: Long = api.ResultCache.memo[java.lang.Long](
+      "bigramCount", docs)(_ => true)(model.count())
     // The bigram "vocabulary" is NOT vocab-sized on adversarial corpora
     // (see [[bigramModelEnc]]) — a corpus-sized model. A SHUFFLE_HASH
     // fallback there builds ~860k-key hash maps in all 32 tasks at once
@@ -1130,8 +1115,8 @@ object Text {
       .groupBy(shiftright($"bid", 32).as("w1id"))
       .agg(sum($"cbg").as("cw1"))
       .cache()
-    val nLeft: Long = api.ResultCache.getOrCompute[java.lang.Long](
-      corpusKey("bigramLeftCount", docs), _ => true)(left.count())
+    val nLeft: Long = api.ResultCache.memo[java.lang.Long](
+      "bigramLeftCount", docs)(_ => true)(left.count())
     val leftB = if (nLeft <= 2000000L) broadcast(left) else left
     bg.join(modelB, "bid")
       .withColumn("w1id", shiftright($"bid", 32))
@@ -1200,7 +1185,7 @@ object Text {
     // span and the groupBy's partial agg collapses to vocab size
     // in-task, so nothing corpus-sized materializes anywhere.)
     // handle memo + IMR-leaf (round-15) — see [[bigramRunsEnc]]
-    val uni = api.ResultCache.getOrComputeCachedLeaf(corpusKey("pmiUni", docs))(
+    val uni = api.ResultCache.memoLeaf("pmiUni", docs)(
       api.Dedup.spread(docs)
         .select(explode(org.apache.spark.sql.GraftExpressionBridge.column(
           graft.plans.TokenRunLengths(
@@ -2075,8 +2060,8 @@ object Text {
         best
       } finally if (relPersisted != null) relPersisted.unpersist()
     }
-    val best: Int = api.ResultCache.getOrCompute[java.lang.Integer](
-      corpusKey("ldspan", docs), _ => true)(Int.box(search())).intValue()
+    val best: Int = api.ResultCache.memo[java.lang.Integer](
+      "ldspan", docs)(_ => true)(Int.box(search())).intValue()
     if (best == 0)
       spark.emptyDataFrame
         .select(lit("").as("span"), lit(0).as("span_len"),

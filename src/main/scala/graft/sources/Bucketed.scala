@@ -51,16 +51,14 @@ object Bucketed {
   }
 
   /** Write `df` as bucketed table `name` once per source version: one
-    * [[graft.api.ResultCache]] entry keyed by the name and
-    * `planKey(df)`, so an in-place refresh of the source misses and
+    * [[graft.api.ResultCache.shared]] entry keyed by the name and the
+    * source read, so an in-place refresh of the source misses and
     * rewrites the table. The entry stays valid while the table exists
     * in the catalog. Synchronized: the write is a DROP + CREATE of a
     * shared catalog table, which racing callers must not interleave. */
   private def ensure(spark: SparkSession, name: String, df: DataFrame,
       buckets: Int, key: String): Unit = synchronized {
-    graft.api.ResultCache.getOrCompute[String](
-      s"bucketed|$name|${graft.api.ResultCache.planKey(df)}",
-      spark.catalog.tableExists(_)) {
+    graft.api.ResultCache.shared[String]("bucketed", name, df)(spark.catalog.tableExists(_)) {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       dropStaleLocation(spark, name)
       df.repartition(buckets, col(key))

@@ -41,6 +41,15 @@ class GraftSessionSpec extends SparkSpec {
       GraftSession.profile("8", "32").toMap)
   }
 
+  test("SPARK_GRAFT_CPUS unset: local[<available processors>], one partition per core") {
+    val cores = Runtime.getRuntime.availableProcessors.toString
+    val resolved = GraftSession.mainConfs(None, Map.empty[String, String].get).toMap
+    assert(resolved == GraftSession.profile(cores, cores).toMap)
+    // ScaleGen's pinned partition count does not follow the host
+    val scaleGen = GraftSession.mainConfs(Some("32"), Map.empty[String, String].get).toMap
+    assert(scaleGen("spark.sql.shuffle.partitions") == "32")
+  }
+
   test("no file under src/main but GraftSession builds a SparkSession") {
     val files = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq

@@ -244,6 +244,90 @@ class MemoKeySpec extends SparkSpec {
     assert(found.isEmpty, s"object-level mutable state outside ResultCache:\n${found.mkString("\n")}")
   }
 
+  test("no file under src/main but ResultCache calls sessionId or planKey") {
+    // the key rule (tag, session or artifact, parameters, planKey of the
+    // input) lives in ResultCache alone: a caller that builds its own
+    // key can drop a field
+    val keyPart = """\b(sessionId|planKey)\b""".r
+    def code(l: String) = { val t = l.trim; !t.startsWith("*") && !t.startsWith("/") }
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "ResultCache.scala"))
+    val found = files.filterNot(_.getFileName.toString == "ResultCache.scala").flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if code(l) && keyPart.findFirstIn(l.split("//")(0)).isDefined =>
+          s"$p:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(found.isEmpty, s"memo key built outside ResultCache:\n${found.mkString("\n")}")
+  }
+
+  /** The entries of one fresh tag, counting computes: each call returns
+    * the stored value, which is the number of the compute that made it. */
+  private class Counted(kind: String) {
+    val computes = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val tag = s"test-$kind-${System.nanoTime()}"
+    def memo(input: DataFrame, params: Any*): Int =
+      ResultCache.memo[java.lang.Integer](tag, input, params: _*)(_ => true)(
+        Int.box(computes.incrementAndGet())).intValue()
+    def shared(artifact: String, input: DataFrame): Int =
+      ResultCache.shared[java.lang.Integer](tag, artifact, input)(_ => true)(
+        Int.box(computes.incrementAndGet())).intValue()
+  }
+
+  test("ResultCache.memo and memoLeaf: identical calls compute once; a parameter or session change misses") {
+    import spark.implicits._
+    withTempDir("graft_memo_calls") { tmp =>
+      Seq((1L, 10L), (2L, 20L)).toDF("k", "v").write.parquet(s"$tmp/t")
+      val other = spark.newSession()
+      def input(s: org.apache.spark.sql.SparkSession) = s.read.parquet(s"$tmp/t")
+
+      val m = new Counted("memo")
+      val first = m.memo(input(spark), 1, "a")
+      assert(m.memo(input(spark), 1, "a") == first, "an identical call missed")
+      assert(m.computes.get == 1)
+      assert(m.memo(input(spark), 2, "a") != first, "a changed first parameter hit")
+      assert(m.memo(input(spark), 1, "b") != first, "a changed second parameter hit")
+      assert(m.memo(input(spark), 1) != first, "a dropped parameter hit")
+      assert(m.memo(input(other), 1, "a") != first, "another session hit")
+      assert(m.computes.get == 5)
+
+      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+      val tag = s"test-memoLeaf-${System.nanoTime()}"
+      def leaf(df: DataFrame, threshold: Int): DataFrame =
+        ResultCache.memoLeaf(tag, df, threshold) {
+          builds.incrementAndGet()
+          df.filter(col("v") > threshold).cache()
+        }
+      val l1 = leaf(input(spark), 5)
+      assert(l1.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation],
+        "memoLeaf did not hand out the cached leaf")
+      assert(leaf(input(spark), 5) eq l1, "an identical memoLeaf call missed")
+      assert(builds.get == 1)
+      assert(leaf(input(spark), 15).count() == 1L, "a changed parameter served the old leaf")
+      leaf(input(other), 5)
+      assert(builds.get == 3, "another session was served this session's leaf")
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("ResultCache.shared: a second newSession() hits; another artifact misses") {
+    import spark.implicits._
+    withTempDir("graft_memo_shared") { tmp =>
+      Seq((1L, 10L), (2L, 20L)).toDF("k", "v").write.parquet(s"$tmp/t")
+      val (s1, s2) = (spark.newSession(), spark.newSession())
+      val c = new Counted("shared")
+      val first = c.shared(s"$tmp/copy", s1.read.parquet(s"$tmp/t"))
+      assert(c.shared(s"$tmp/copy", s2.read.parquet(s"$tmp/t")) == first,
+        "a second session missed a shared entry")
+      assert(c.computes.get == 1)
+      assert(c.shared(s"$tmp/other", s2.read.parquet(s"$tmp/t")) != first,
+        "another artifact hit")
+      assert(c.computes.get == 2)
+    }
+  }
+
   /** Jobs of `f` as Bench counts them: a listener plus an explicit
     * listener-bus drain (events arrive asynchronously). */
   private def jobsOf(f: => Unit): Int = {
